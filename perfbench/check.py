@@ -10,8 +10,13 @@ import datetime
 import glob
 import math
 import os
+import sys
 
 import duckdb
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                                "tools"))
+from oracle_check import norm  # noqa: E402  the repository's oracle rule
 
 SF_TABLES = ["events", "documents", "embeddings"]
 RAW_TO_STAGING = "pipelines.raw_to_staging"
@@ -22,7 +27,8 @@ CURATE = "pipelines.curate_documents"
 def _connect():
     con = duckdb.connect()
     con.execute("SET TimeZone = 'UTC'")
-    con.execute("SET threads = 2")
+    # the benchmark JVM has exited: the checks may use every core
+    con.execute(f"SET threads = {os.cpu_count()}")
     return con
 
 
@@ -116,13 +122,6 @@ def check_lake(report, feed):
     return fails
 
 
-def _norm(df):
-    """The repository's oracle normalization: columns sorted by name,
-    every value stringified, rows sorted."""
-    df = df[sorted(df.columns)]
-    return sorted(tuple(str(v) for v in row) for row in df.itertuples(index=False))
-
-
 def check_queries(report, sf_dir):
     """Each landed query result must equal DuckDB running the query's
     oracle SQL over the generated inputs."""
@@ -139,7 +138,7 @@ def check_queries(report, sf_dir):
         want = con.execute(sql).fetchdf()
         if sorted(got.columns) != sorted(want.columns):
             fails.append((f"query.{q}", f"columns {sorted(got.columns)} != {sorted(want.columns)}"))
-        elif _norm(got) != _norm(want):
+        elif norm(got) != norm(want):
             fails.append((f"query.{q}", f"{len(got)} rows differ from the oracle's {len(want)}"))
     return fails
 

@@ -35,27 +35,28 @@ STAMP = os.path.join(BUILD, "build.stamp")
 JVM_HEAP = "2g"
 
 sys.path.insert(0, HERE)
-import check  # noqa: E402
 import gen  # noqa: E402
+try:
+    import check  # noqa: E402  (uses the repository's tools/oracle_check.py)
+except ImportError as e:
+    sys.exit(f"[perfbench] {e}: run from a checkout of the repository")
 
 # Input sizes and operation mixes. BENCHMARK.json lists lake_backfill and
 # corpus_curate; graph_iter and lake_daily run on demand (a warm graph_iter
 # pass alone takes over a minute at local[4]).
 WORKLOADS = {
     "lake_backfill": {
-        "feed": {"n_vessels": 100, "n_days": 3, "points_per_vessel_day": 100},
+        "feed": {"n_vessels": 500, "n_days": 3, "points_per_vessel_day": 100},
     },
     "corpus_curate": {
-        "sf": {"n_events": 1000, "n_users": 300, "n_docs": 600, "n_vecs": 300,
+        "sf": {"n_events": 1000, "n_users": 300, "n_docs": 1000, "n_vecs": 300,
                "n_groups": 20, "group_size": 3, "n_exact": 10},
     },
     "lake_daily": {
-        "on_demand": True,
         "feed": {"n_vessels": 100, "n_days": 4, "points_per_vessel_day": 50},
         "op_mix": {"reland": 1, "validation": 4, "lookup_read": 3, "lookup_pruned": 4},
     },
     "graph_iter": {
-        "on_demand": True,
         "sf": {"n_events": 5000, "n_users": 1500, "n_docs": 200, "n_vecs": 300},
     },
 }
@@ -141,7 +142,7 @@ def build():
 def generate(workload, seed, work):
     """Make the workload's inputs from the seed; return the manifest."""
     cfg = WORKLOADS[workload]
-    params = {k: v for k, v in cfg.items() if k not in ("feed", "sf", "on_demand")}
+    params = {k: v for k, v in cfg.items() if k not in ("feed", "sf")}
     m = {"workload": workload, "seed": seed, "params": params}
     if "feed" in cfg:
         f = cfg["feed"]
@@ -152,6 +153,12 @@ def generate(workload, seed, work):
     with open(os.path.join(work, "manifest.json"), "w") as f:
         json.dump(m, f)
     return m
+
+
+def listed_workloads():
+    """Workloads BENCHMARK.json lists, the ones a regression check runs."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        return {w["name"] for w in json.load(f)["workloads"]}
 
 
 def git_commit():
@@ -171,9 +178,10 @@ def git_commit():
 
 def percentile_tail(xs):
     """Latency at the highest percentile that has at least ten samples
-    beyond it (the maximum when there are ten samples or fewer)."""
+    beyond it. Below 21 samples that percentile would lie under the median;
+    the maximum is reported instead."""
     s = sorted(xs)
-    i = max(0, len(s) - 11)
+    i = len(s) - 11 if len(s) >= 21 else len(s) - 1
     return s[i], (100.0 * i / (len(s) - 1) if len(s) > 1 else 100.0)
 
 
@@ -188,10 +196,10 @@ def main():
         sys.exit(f"[perfbench] library sources not found at {LIB_SRC}: run from a "
                  "checkout of the repository")
 
-    # a listed workload's run must end within 180 s, or 900 s when it builds
-    # first; on-demand workloads get 900 s
+    # a workload BENCHMARK.json lists must end its run within 180 s, or
+    # 900 s when it builds first; the others run on demand and get 900 s
     built = build()
-    deadline = T0 + (880 if built or WORKLOADS[a.workload].get("on_demand") else 170)
+    deadline = T0 + (880 if built or a.workload not in listed_workloads() else 170)
     t_setup0 = time.time()
     work = os.path.join(BUILD, "work", a.workload)
     shutil.rmtree(work, ignore_errors=True)
@@ -279,7 +287,7 @@ def main():
         "planted_near_dup_groups": manifest.get("sf", {}).get("near_dup_groups"),
         "passes": len(passes),
         "pass_wall_s": [p["wall_s"] for p in passes], "pass_cpu_s": [p["cpu_s"] for p in passes],
-        "warmup_wall_s": sum(o["ms"] for o in res["warmup"]["ops"]) / 1000.0,
+        "warmup_wall_s": [sum(o["ms"] for o in w["ops"]) / 1000.0 for w in res["warmups"]],
         "attempted": attempted, "failed": failed, "failed_ratio": failed / attempted,
         "check_failures": [f"{t}: {w}" for t, w in fails],
         "end_to_end": e2e,

@@ -96,8 +96,11 @@ object Main {
       case other => sys.error(s"unknown workload $other")
     }
     w.setup()
-    val warm = new Pass(0, tracer)
-    w.pass(warm)
+    // one warm-up pass; the pass after it is still warming up (JIT), so a
+    // traced run warms up once more, lest the tracing overhead, measured
+    // against the untraced passes around a traced one, absorb that drift
+    val warmups = Seq.fill(if (trace) 2 else 1)(new Pass(0, tracer))
+    warmups.foreach(w.pass)
     val setupDoneMs = System.currentTimeMillis()
 
     val passes = mutable.ArrayBuffer[Pass]()
@@ -131,7 +134,7 @@ object Main {
       "session_start_ms" -> sessionT0,
       "session_ready_ms" -> sessionReadyMs,
       "setup_done_ms" -> setupDoneMs,
-      "warmup" -> passJson(warm),
+      "warmups" -> warmups.map(passJson),
       "passes" -> passes.map(passJson).toSeq,
       "peak_rss_mb" -> vmHwmMb(),
       "run_record" -> Map(
