@@ -22,7 +22,8 @@ import scala.util.DynamicVariable
  */
 object CacheScope {
 
-  private val current: DynamicVariable[Option[scala.collection.mutable.ArrayBuffer[DataFrame]]] =
+  /** Release actions of the frames cached inside the innermost scope. */
+  private val current: DynamicVariable[Option[scala.collection.mutable.ArrayBuffer[() => Unit]]] =
     new DynamicVariable(None)
 
   /** Persist `df`, registering it for release at the end of the enclosing
@@ -34,10 +35,36 @@ object CacheScope {
   def persist(df: DataFrame): DataFrame = {
     if (df.storageLevel == StorageLevel.NONE) {
       df.persist(StorageLevel.MEMORY_AND_DISK)
-      current.value.foreach(_ += df)
+      current.value.foreach(_ += (() => df.unpersist(false)))
     }
     df
   }
+
+  /**
+   * Compute-once point for a pipeline whose outputs share a prefix: every
+   * frame derived from the returned one reads the SAME rows, computed by
+   * the first action that needs them into MEMORY_AND_DISK blocks, so a
+   * fan-out of N landing writes runs the prefix (its scan, its shuffles)
+   * once, not N times, and a nondeterministic prefix (`dropDuplicates`
+   * keeping an arbitrary row per key) gives every output the same pick.
+   *
+   * Unlike [[persist]] this is not a CacheManager entry: no other query is
+   * ever served these rows because its plan happens to be equal (a second
+   * read of the same input path recomputes). The frame stays lazy —
+   * building it submits no job — and keeps its lineage, so a lost block
+   * is recomputed, not a failed job. The blocks are released when the
+   * enclosing [[scoped]] block exits; with no scope, Spark's
+   * ContextCleaner releases them once the derived frames are unreachable.
+   * A frame that is already persisted is returned untouched.
+   */
+  def once(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else {
+      val (shared, release) =
+        org.apache.spark.sql.GraftBridge.computeOnce(df, StorageLevel.MEMORY_AND_DISK)
+      current.value.foreach(_ += release)
+      shared
+    }
 
   /**
    * Eager lineage cut for iterative loops (plans otherwise grow
@@ -82,11 +109,11 @@ object CacheScope {
     }
 
   /** Run `body` (typically: build a query plan and run its action), then
-   * unpersist every frame persisted inside it. */
+   * release every frame cached inside it by [[persist]] or [[once]]. */
   def scoped[T](body: => T): T = {
-    val frames = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    try current.withValue(Some(frames))(body)
-    finally frames.foreach(_.unpersist(false))
+    val releases = scala.collection.mutable.ArrayBuffer[() => Unit]()
+    try current.withValue(Some(releases))(body)
+    finally releases.foreach(_())
   }
 }
 

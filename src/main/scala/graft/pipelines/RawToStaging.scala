@@ -7,14 +7,16 @@ import org.apache.spark.sql.types.DataType
 
 /**
  * Raw → staging pipeline: the composed operator chain of the reference's
- * pipelines/raw_to_staging.py, re-expressed as one lazy plan per output.
+ * pipelines/raw_to_staging.py, re-expressed as lazy frames.
  *
  * Order mirrors the reference: column normalization → schema enforcement
  * → empty→null → timestamp parse + y/m/d derivation → coordinate
  * validity split (invalid rows quarantined, not dropped) → value clamps
- * → content-hash dedup → movement flag. Everything stays one declarative
- * plan — Catalyst fuses the projections and pushes the validity filter
- * into the scan.
+ * → content-hash dedup → movement flag. Catalyst fuses the projections
+ * and pushes the validity filter into the scan. [[run]] returns one plan
+ * per output; [[runWithDq]] computes the staged frame once and splits
+ * every output from it, as the reference writes staging and its
+ * quarantine from one cleaned DataFrame.
  */
 object RawToStaging {
 
@@ -64,11 +66,18 @@ object RawToStaging {
    * frames (the caller actions them): "expectations" — per-check
    * violation counts over the staged frame; "benford" — first-digit
    * chi-square screen; "k_anonymity" — re-identification risk profile.
-   * Everything stays declarative: no driver action happens here. */
+   * Everything stays declarative: no driver action happens here.
+   *
+   * The staged frame is a [[graft.CacheScope.once]] point: the first
+   * action over any output computes it (one dedup shuffle) and the rest
+   * read those rows. So a key `Dedup.exact` keeps lands in exactly one of
+   * clean and dqQuarantine, and the reports count the rows those two
+   * hold, even though `dropDuplicates` keeps an arbitrary row per key. */
   def runWithDq(raw: DataFrame, cfg: Config, dq: DqConfig)
       : (DataFrame, DataFrame, DataFrame, Map[String, DataFrame]) = {
     require(dq.expectations.nonEmpty, "runWithDq needs at least one expectation")
-    val (staged, quarantine) = run(raw, cfg)
+    val (prefix, quarantine) = run(raw, cfg)
+    val staged = graft.CacheScope.once(prefix)
     val (clean, dqQuarantine) =
       graft.operators.Quality.expectationsSplit(staged, dq.expectations)
     val reports = Map(

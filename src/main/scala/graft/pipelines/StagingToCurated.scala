@@ -12,8 +12,12 @@ import org.apache.spark.sql.functions._
  * daily fact, session summary).
  *
  * All per-entity features (session id, segment distance) share a single
- * `Window.partitionBy(id).orderBy(ts)` family, so the whole enrichment
- * costs ONE shuffle; the rollups then aggregate with map-side combine.
+ * `Window.partitionBy(id).orderBy(ts)` family, so the enrichment costs
+ * ONE shuffle, and the enriched frame is a [[graft.CacheScope.once]]
+ * point: that shuffle runs once per call, not once per output, however
+ * many of the three outputs are landed. The rollups then aggregate with
+ * map-side combine. No job runs in [[run]]; the first output's action
+ * computes the enrichment.
  */
 object StagingToCurated {
 
@@ -29,12 +33,12 @@ object StagingToCurated {
   def run(staged: DataFrame, cfg: Config): Curated = {
     val sessioned = Sessionize(staged, cfg.idCol, cfg.tsSecCol, cfg.gapSeconds,
       tieBreak = Seq(cfg.rowKeyCol))
-    val enriched = Movement.state(
+    val enriched = graft.CacheScope.once(Movement.state(
       Trajectory.segmentDistance(sessioned, Seq(cfg.idCol), cfg.tsSecCol,
         cfg.latCol, cfg.lonCol, tieBreak = Seq(cfg.rowKeyCol)),
       cfg.speedCol, cfg.speedThreshold)
       .withColumn("geohash",
-        Geo.geohash(col(cfg.latCol), col(cfg.lonCol), cfg.geohashPrecision))
+        Geo.geohash(col(cfg.latCol), col(cfg.lonCol), cfg.geohashPrecision)))
 
     val keys = Seq(cfg.idCol, "session_id")
     val trajectory = Trajectory.sample(enriched, cfg.idCol, "session_id",

@@ -14,8 +14,12 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
  * the csv source refuses plans whose required schema is only the
  * internal corrupt-record column (so `quarantine.count()` would throw,
  * and the documented workaround is `.cache()` — a non-starter at 100 TB).
- * With `from_csv` the corrupt marker is an ordinary struct field: both
- * outputs derive from one text scan, no cache, full pushdown.
+ * With `from_csv` the corrupt marker is an ordinary struct field, so the
+ * split is two filters over one parsed frame. That frame is a
+ * [[graft.CacheScope.once]] point: the text scan and the `from_csv` parse
+ * run once per call however many outputs are landed from it (good rows
+ * feed staging and its validity/expectation quarantines, bad lines the
+ * CSV quarantine), instead of once per landing write.
  */
 object CsvSource {
 
@@ -24,7 +28,7 @@ object CsvSource {
   /**
    * Read CSV at `path` against `schema`, returning (good, quarantine).
    * `good` has exactly the declared schema; `quarantine` carries the raw
-   * line for replay/inspection.
+   * line for replay/inspection. Both are lazy: no job runs here.
    */
   def readWithQuarantine(spark: SparkSession, path: String,
                          schema: StructType,
@@ -35,13 +39,14 @@ object CsvSource {
     val raw = spark.read.text(path)
     val headerLine = schema.fieldNames.mkString(",")
     val body = if (header) raw.filter(col("value") =!= headerLine) else raw
-    val parsed = body.withColumn("_p", from_csv(col("value"), withCorrupt, options))
-    val good = parsed
-      .filter(col(s"_p.$CorruptCol").isNull)
-      .select(schema.fieldNames.toSeq.map(f => col(s"_p.$f").as(f)): _*)
-    val quarantine = parsed
-      .filter(col(s"_p.$CorruptCol").isNotNull)
-      .select(col("value").as("raw_line"))
+    // the raw line is kept only where the parse failed, so the shared
+    // rows hold each good line once, as parsed fields
+    val parsed = graft.CacheScope.once(
+      body.withColumn("_p", from_csv(col("value"), withCorrupt, options))
+        .select((schema.fieldNames.toSeq.map(f => col(s"_p.$f").as(f)) :+
+          when(col(s"_p.$CorruptCol").isNotNull, col("value")).as("raw_line")): _*))
+    val good = parsed.filter(col("raw_line").isNull).drop("raw_line")
+    val quarantine = parsed.filter(col("raw_line").isNotNull).select("raw_line")
     (good, quarantine)
   }
 }

@@ -14,8 +14,8 @@ import org.scalatest.TagAnnotation;
  * budget — the full suite measured 50:50 wall on an idle 32-core box,
  * ~5x any reasonable harness timeout, with ~40 minutes of it in ten
  * suites that re-derive builder-side evidence (plan dumps, shuffle-byte
- * budgets, A/B equivalence proofs, checkpoint-restart drives). Those
- * still run green via `sbt slowTests` (builder-side, every round).
+ * budgets, A/B equivalence proofs, checkpoint-restart drives). The full
+ * suite, these included, runs with `GRAFT_ALL_TESTS=1 sbt test`.
  */
 @TagAnnotation
 @Inherited

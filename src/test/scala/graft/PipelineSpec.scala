@@ -1,8 +1,17 @@
 package graft
 
+import graft.operators.Cleanse
 import graft.pipelines._
+import graft.sources.{CsvSource, JsonSource, LakeWriter}
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{CacheManagerProbe, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline compositions (reference: the pipelines package). */
 class PipelineSpec extends SparkSpecBase {
@@ -215,5 +224,200 @@ class PipelineSpec extends SparkSpecBase {
     assert(got === truth, s"incremental-only: ${got -- truth}; scratch-only: ${truth -- got}")
     assert(got.map(_._1) === Set(7L, 8L)) // user 9 quarantined, never reaches state
     assert(StateStore.committedVersions(spark, root).size === 3)
+  }
+
+  // ---- the lake chain's compute-once points ----
+
+  private val feedSchema = StructType(Seq(
+    StructField("MMSI", LongType), StructField("BaseDateTime", StringType),
+    StructField("LAT", StringType), StructField("LON", StringType),
+    StructField("SOG", StringType), StructField("COG", StringType)))
+
+  private case class Fix(mmsi: String, ts: String, lat: String, lon: String,
+                         sog: String, cog: String)
+
+  /** An AIS-shaped feed: 40 vessels × 150 one-minute fixes over two
+   * days, with planted exact duplicates, out-of-range latitudes,
+   * negative speeds and lines the parser rejects. */
+  private val feed: Seq[Fix] = {
+    val t0 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+    for {
+      v <- 0 until 40; i <- 0 until 150
+      n = v * 150 + i
+      fix = Fix(s"${366000000 + v}", t0.plusMinutes(i + 60L * v).format(fmt),
+        if (n % 53 == 7) "95.0" else f"${10.0 + v * 0.1 + i * 0.001}%.4f",
+        f"${-70.0 + i * 0.002}%.4f",
+        if (n % 41 == 3) "-1.0" else f"${(n * 7) % 25 + 0.5}%.1f",
+        s"${(n * 13) % 360}.0")
+      out <- if (n % 97 == 11) Seq(fix.copy(mmsi = s"x$v")) // unparseable MMSI
+             else if (n % 30 == 5 && n % 53 != 7) Seq(fix, fix) // exact duplicate line
+             else Seq(fix)
+    } yield out
+  }
+
+  private val feedCfg = RawToStaging.Config(
+    columnMapping = Map("MMSI" -> "user_id", "BaseDateTime" -> "ts",
+      "LAT" -> "lat", "LON" -> "lon", "SOG" -> "speed", "COG" -> "course"),
+    schema = Seq("user_id" -> LongType, "ts" -> StringType,
+      "lat" -> DoubleType, "lon" -> DoubleType, "speed" -> DoubleType,
+      "course" -> DoubleType),
+    tsCol = "ts",
+    validCondition = _ => Cleanse.validCoords(col("lat"), col("lon")),
+    clampCaps = Map("speed" -> 102.2),
+    dedupCols = Seq("user_id", "ts", "lat", "lon"),
+    speedCol = "speed", speedThreshold = 0.5)
+
+  private val feedDq = RawToStaging.DqConfig(
+    Seq("speed_non_negative" -> (col("speed") >= 0.0)))
+
+  private def writeFeed(dir: java.io.File): (String, String) = {
+    val csv = new java.io.File(dir, "feed.csv")
+    Files.writeString(csv.toPath, (feedSchema.fieldNames.mkString(",") +: feed.map(f =>
+      Seq(f.mmsi, f.ts, f.lat, f.lon, f.sog, f.cog).mkString(","))).mkString("", "\n", "\n"))
+    val json = new java.io.File(dir, "feed.jsonl")
+    Files.writeString(json.toPath, feed.map(f =>
+      s"""{"MMSI": ${f.mmsi}, "BaseDateTime": "${f.ts}", "LAT": "${f.lat}", """ +
+        s""""LON": "${f.lon}", "SOG": "${f.sog}", "COG": "${f.cog}"}""").mkString("", "\n", "\n"))
+    (csv.getPath, json.getPath)
+  }
+
+  /** Spark jobs submitted while `body` runs, and its result. */
+  private def countJobs[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicLong()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftListenerBridge.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      GraftListenerBridge.drainListenerBus(sc)
+      (jobs.get.toInt, out)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Shuffle records written by each stage that ran inside `body`. */
+  private def stageShuffleRecords(body: => Unit): Seq[Long] = {
+    val sc = spark.sparkContext
+    val recs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val l = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        recs.add(e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    GraftListenerBridge.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try { body; GraftListenerBridge.drainListenerBus(sc) }
+    finally sc.removeSparkListener(l)
+    recs.asScala.toSeq
+  }
+
+  /** Bytes read through Hadoop's local file system, all threads. */
+  private def localBytesRead(): Long =
+    org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getBytesRead).sum
+
+  /** Check that `body` leaves no CacheManager entry and no persisted RDD
+   * behind, and that it did persist something while it ran. */
+  private def releasesEverything(body: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val cacheEntries = CacheManagerProbe.entries(spark)
+    val before = sc.getPersistentRDDs.keySet
+    var during = Set.empty[Int]
+    CacheScope.scoped { body; during = sc.getPersistentRDDs.keySet.toSet -- before }
+    assert(during.nonEmpty, "nothing was computed once")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty, "persisted RDDs outlived the scope")
+    assert(CacheManagerProbe.entries(spark) === cacheEntries)
+  }
+
+  test("runWithDq: every deduped key lands in exactly one of clean and dqQuarantine") {
+    // two rows per dedup key, one passing the expectation and one failing
+    // it, in an order that changes at every evaluation: dropDuplicates
+    // keeps whichever row comes first, so both outputs must see ONE pick
+    val shuffled = udf(() => scala.util.Random.nextDouble()).asNondeterministic()
+    val raw = (0 until 200).flatMap(k => Seq((k.toString, "5.0"), (k.toString, "-1.0")))
+      .toDF("MMSI", "SOG")
+      .withColumn("BaseDateTime", lit("2024-01-01 10:00:00"))
+      .withColumn("LAT", lit("10.0")).withColumn("LON", lit("20.0"))
+      .withColumn("COG", lit("90.0"))
+      .orderBy(shuffled())
+    val (clean, _, dq, _) = RawToStaging.runWithDq(raw, feedCfg, feedDq)
+    val keys = clean.select("user_id").as[Long].collect().toSeq ++
+      dq.select("user_id").as[Long].collect().toSeq
+    val once = keys.sorted == (0L until 200L)
+    assert(once, s"${keys.size} rows; in both: ${keys.diff(keys.distinct).distinct.size}, " +
+      s"in neither: ${(0L until 200L).diff(keys).size}")
+  }
+
+  test("raw→staging: no job at call time; landing the four outputs scans the source once") {
+    val dir = Files.createTempDirectory("graft-once").toFile
+    val (csv, json) = writeFeed(dir)
+    val sources: Seq[(String, String => (DataFrame, DataFrame))] = Seq(
+      csv -> (p => CsvSource.readWithQuarantine(spark, p, feedSchema)),
+      json -> (p => JsonSource.readWithQuarantine(spark, p, feedSchema)))
+    for ((path, read) <- sources) releasesEverything {
+      val (jobs, (clean, validityQ, dqQ, unparsed)) = countJobs {
+        val (good, bad) = read(path)
+        val (c, v, d, _) = RawToStaging.runWithDq(good, feedCfg, feedDq)
+        (c, v, d, bad)
+      }
+      assert(jobs === 0, s"$path: jobs at call time")
+      val out = s"${dir.getPath}/lake-${new java.io.File(path).getName}"
+      val read0 = localBytesRead()
+      LakeWriter.writePartitioned(clean, s"$out/staging", keyCol = Some("user_id"),
+        filesPerPartition = 2)
+      LakeWriter.writePartitioned(validityQ, s"$out/quarantine_validity", filesPerPartition = 1)
+      LakeWriter.writePartitioned(dqQ, s"$out/quarantine_dq", filesPerPartition = 1)
+      unparsed.coalesce(1).write.mode("overwrite").parquet(s"$out/quarantine_source")
+      val scanned = localBytesRead() - read0
+      val size = new java.io.File(path).length
+      assert(scanned >= size && scanned <= size * 1.1,
+        s"$path: read $scanned bytes of a $size-byte file")
+      // every line is accounted for: landed once or dropped as a duplicate
+      def landed(t: String) = spark.read.parquet(s"$out/$t").count()
+      val dups = feed.size - feed.distinct.size
+      assert(landed("staging") + landed("quarantine_validity") + landed("quarantine_dq") +
+        landed("quarantine_source") + dups === feed.size)
+      assert(Seq("quarantine_validity", "quarantine_dq", "quarantine_source")
+        .forall(landed(_) > 0))
+    }
+  }
+
+  test("StagingToCurated: no job at call time; the three outputs run the window exchange once") {
+    val dir = Files.createTempDirectory("graft-once-cur").toFile
+    val (csv, _) = writeFeed(dir)
+    CacheScope.scoped {
+      val (good, _) = CsvSource.readWithQuarantine(spark, csv, feedSchema)
+      LakeWriter.writePartitioned(RawToStaging.run(good, feedCfg)._1, s"$dir/staging")
+    }
+    val staged = LakeWriter.read(spark, s"$dir/staging")
+      .withColumn("ts_sec", unix_timestamp(col("ts")))
+      .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+      .withColumn("row_key", sha2(concat_ws("|", col("user_id"), col("ts_sec"),
+        col("lat"), col("lon")), 256))
+    val n = staged.count()
+    val cfg = StagingToCurated.Config(
+      idCol = "user_id", tsSecCol = "ts_sec", dayCol = "day",
+      latCol = "lat", lonCol = "lon", speedCol = "speed",
+      gapSeconds = 10800L, speedThreshold = 0.5,
+      fastSpeedThreshold = 10.0, fastIntervalSec = 300L, slowIntervalSec = 1800L,
+      rowKeyCol = "row_key")
+    releasesEverything {
+      val (jobs, cur) = countJobs(StagingToCurated.run(staged, cfg))
+      assert(jobs === 0, "jobs at call time")
+      // the window exchange is the one shuffle that writes every staged
+      // row; the rollups' exchanges carry partial aggregates
+      val stages = stageShuffleRecords {
+        LakeWriter.writePartitioned(cur.trajectory.drop("year", "month"),
+          s"$dir/trajectory", partitionCols = Seq("day"), filesPerPartition = 1)
+        LakeWriter.writePartitioned(cur.daily, s"$dir/daily",
+          partitionCols = Seq("day"), filesPerPartition = 1)
+        cur.summary.write.mode("overwrite").parquet(s"$dir/summary")
+      }
+      assert(stages.count(_ == n) === 1, s"per-stage shuffle records $stages, $n staged rows")
+      assert(spark.read.parquet(s"$dir/summary").agg(sum("n_points")).head().getLong(0) === n)
+      assert(spark.read.parquet(s"$dir/trajectory").count() < n)
+    }
   }
 }
