@@ -66,48 +66,6 @@ object CacheScope {
       shared
     }
 
-  /**
-   * Eager lineage cut for iterative loops (plans otherwise grow
-   * k^rounds — see pagerank's journal comment). With `dir` set the cut
-   * is a RELIABLE `checkpoint` into it: blocks survive executor loss,
-   * which on a real cluster is what keeps a lost executor at round 9
-   * from killing a 10-round job. With None it falls back to
-   * `localCheckpoint` — blocks die with their executor, acceptable in
-   * local mode and for cheap-to-rerun loops. `setCheckpointDir` appends
-   * a per-context UUID subdir, so only set it when the requested root
-   * isn't already the active one.
-   */
-  def lineageCut(df: DataFrame, dir: Option[String] = None): DataFrame = dir match {
-    case Some(d) =>
-      val sc = df.sparkSession.sparkContext
-      if (!sc.getCheckpointDir.exists(_.contains(d))) sc.setCheckpointDir(d)
-      df.checkpoint(true)
-    case None => df.localCheckpoint(true)
-  }
-
-  /**
-   * LAZY twin of [[lineageCut]] for fixed-round loops whose per-round
-   * frames are small (label/rank frames): the LOGICAL plan is truncated
-   * identically at build time (the returned frame is a LogicalRDD scan
-   * either way — the k^rounds tree blowup is cut the same), but
-   * materialization rides the caller's next action instead of paying one
-   * eager job PER ROUND — the per-round fixed job cost is the measured
-   * wall floor of the tiny-graph Louvain/Leiden fixtures. The RDD DAG
-   * stays linear (each round references the previous round's RDD node,
-   * not its tree), so one final action runs all rounds as one job chain.
-   * Use the eager cut when a loop's round count is DATA-DEPENDENT (the
-   * driver must observe per-round state) or when `dir`-reliable blocks
-   * are wanted for executor-loss recovery.
-   */
-  def lineageCutLazy(df: DataFrame, dir: Option[String] = None): DataFrame =
-    dir match {
-      case Some(d) =>
-        val sc = df.sparkSession.sparkContext
-        if (!sc.getCheckpointDir.exists(_.contains(d))) sc.setCheckpointDir(d)
-        df.checkpoint(false)
-      case None => df.localCheckpoint(false)
-    }
-
   /** Run `body` (typically: build a query plan and run its action), then
    * release every frame cached inside it by [[persist]] or [[once]]. */
   def scoped[T](body: => T): T = {
@@ -189,10 +147,13 @@ object SharedStage {
     df.sparkSession.sparkContext.isStopped
 
   /** Public snapshot signature of `dir` — for callers that memoize
-   * SEVERAL keys which must come from ONE consistent snapshot (e.g. the
-   * three IVFADC index frames): compute it once and pass it to every
-   * [[getPinned]] so a dir rewrite between calls can never mix frames
-   * from different snapshots into one composite artifact. */
+   * SEVERAL keys under one snapshot (e.g. the three IVFADC index
+   * frames): compute it once and pass it to every [[getPinned]], so a
+   * frame cached under an OLD snapshot is never served next to one
+   * rebuilt from the new snapshot. Pinning does not serialize the
+   * computes themselves: a dir rewrite landing between two UNCACHED
+   * computes still stores frames read from different snapshots under
+   * the one pinned signature. */
   def snapshotSig(dir: String): String = signature(dir)
 
   /** Memoized compute-and-persist of `key` for input `dir`, valid only

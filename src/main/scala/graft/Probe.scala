@@ -57,12 +57,12 @@ object Probe {
       private val jobT0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobAcc.incrementAndGet()
-        if (sys.env.contains("GRAFT_LOOP_DEBUG"))
+        if (Fixpoint.debug)
           jobT0.put(j.jobId, System.nanoTime())
       }
       override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
         val t0 = jobT0.remove(j.jobId)
-        if (t0 != 0L && sys.env.contains("GRAFT_LOOP_DEBUG"))
+        if (t0 != 0L && Fixpoint.debug)
           System.err.println(f"[job] ${j.jobId}%4d ${(System.nanoTime() - t0) / 1e3}%8.0f us")
       }
     })

@@ -89,34 +89,21 @@ object Analytics {
     val dangling = graft.CacheScope.persist(
       nodes.join(eNorm.select(col("src").as("node")).distinct(),
         Seq("node"), "left_anti"))
-    var ranks = nodes.crossJoin(broadcast(nN))
+    val ranks0 = nodes.crossJoin(broadcast(nN))
       .select(col("node"), (lit(1.0) / col("n_nodes")).as("pr"))
-    for (_ <- 1 to iters) {
-      // lineage cut, not persist: each round references the previous
-      // one THREE times (contribution join, dangling aggregate, output),
-      // so the LOGICAL plan grows 3^iters without a hard lineage cut —
-      // caching dedups execution but Catalyst still carries (and
-      // stringifies) the full tree, which alone blows the driver heap at
-      // iters=10. The eager checkpoint truncates each round to an RDD
-      // leaf: plans stay O(1) per round. (Cutting every SECOND round
-      // with a lazy persist in between was tried: no measurable win at
-      // the 5M-edge stress scale — job dispatch isn't the bottleneck
-      // there — so the simpler uniform cut stays.)
-      // `checkpointDir` picks reliable checkpointing (survives executor
-      // loss on a cluster); the local default's blocks live at
-      // MEMORY_AND_DISK and are reclaimed by the ContextCleaner.
-      // LAZY cut (the louvainMoves treatment): the round count is FIXED
-      // and nothing observes per-round state on the driver, so the plan
-      // truncates identically while the rounds materialize with the
-      // consumer's one action instead of one eager job per round — the
-      // blocks still cache at first compute, so the round's two readers
-      // (contribution join + dangling aggregate) share one evaluation.
-      val r = graft.CacheScope.lineageCutLazy(ranks, checkpointDir)
+    graft.Fixpoint.iterate("pagerank", ranks0, checkpointDir)(
+        graft.Fixpoint.Fixed(iters)) { (ranks, _, cut) =>
+      // each round references the previous one THREE times
+      // (contribution join, dangling aggregate, output): cut every round.
+      // (Cutting every SECOND round with a lazy persist in between was
+      // tried: no measurable win at the 5M-edge stress scale — job
+      // dispatch isn't the bottleneck there — so the uniform cut stays.)
+      val r = cut(ranks)
       val inMass = r.join(eNorm, r("node") === eNorm("src"))
         .groupBy("dst").agg(sum(col("pr") * col("wn")).as("in_mass"))
       val dangMass = r.join(dangling, Seq("node"), "left_semi")
         .agg(coalesce(sum("pr"), lit(0.0)).as("d_mass"))
-      ranks = nodes
+      nodes
         .join(inMass, nodes("node") === inMass("dst"), "left")
         .crossJoin(broadcast(dangMass)).crossJoin(broadcast(nN))
         .select(nodes("node"),
@@ -124,7 +111,6 @@ object Analytics {
             (coalesce(col("in_mass"), lit(0.0)) + col("d_mass") / col("n_nodes")))
             .as("pr"))
     }
-    ranks
   }
 
   /**
@@ -190,16 +176,15 @@ object Analytics {
     val dangling = graft.CacheScope.persist(
       nodes.join(eNorm.select(col("src").as("node")).distinct(),
         Seq("node"), "left_anti"))
-    var ranks = tele.select(col("node"), col("t").as("pr"))
-    for (_ <- 1 to iters) {
-      // LAZY cut for the same reason as [[pagerank]]'s loop: fixed round
-      // count, no driver observation — one consumer action runs the chain
-      val r = graft.CacheScope.lineageCutLazy(ranks, checkpointDir)
+    val ranks = graft.Fixpoint.iterate("personalizedPagerank",
+        tele.select(col("node"), col("t").as("pr")), checkpointDir)(
+        graft.Fixpoint.Fixed(iters)) { (prev, _, cut) =>
+      val r = cut(prev)
       val inMass = r.join(eNorm, r("node") === eNorm("src"))
         .groupBy("dst").agg(sum(col("pr") * col("wn")).as("in_mass"))
       val dangMass = r.join(dangling, Seq("node"), "left_semi")
         .agg(coalesce(sum("pr"), lit(0.0)).as("d_mass"))
-      ranks = tele
+      tele
         .join(inMass, tele("node") === inMass("dst"), "left")
         .crossJoin(broadcast(dangMass))
         .select(tele("node"),
@@ -262,15 +247,14 @@ object Analytics {
         .repartition(col("u")))
     val nodes = graft.CacheScope.persist(
       sym.select(col("u").as("node")).distinct())
-    var labels = nodes.withColumn("lbl", col("node"))
-    for (_ <- 1 to iters) {
-      // LAZY cut: fixed rounds, the label frame's two readers (vote join
-      // + self-vote union) share the blocks cached at first compute
-      val l = graft.CacheScope.lineageCutLazy(labels, checkpointDir)
+    val labels = graft.Fixpoint.iterate("lpaCommunities",
+        nodes.withColumn("lbl", col("node")), checkpointDir)(
+        graft.Fixpoint.Fixed(iters)) { (prev, _, cut) =>
+      val l = cut(prev)
       val nbrVotes = sym
         .join(l.withColumnRenamed("node", "v"), "v")
         .select(col("u").as("node"), col("lbl"))
-      labels = nbrVotes.union(l.select(col("node"), col("lbl")))
+      nbrVotes.union(l.select(col("node"), col("lbl")))
         .groupBy("node", "lbl").agg(count(lit(1)).as("cnt"))
         .groupBy("node")
         .agg(min_by(col("lbl"),
@@ -461,87 +445,79 @@ object Analytics {
         greatest(col(aCol), col(bCol)).as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .distinct())
-    var sym = graft.CacheScope.persist(
+    val sym0 = graft.CacheScope.persist(
       und.union(und.select(col("v").as("u"), col("u").as("v")))
         .select(col("u"), col("v"), lit(1L).as("w"))
         .repartition(col("u")))
-    var selfW: Option[DataFrame] = None
-    var init: Option[DataFrame] = None
     // orig → current-level node; refinement labels compose into it
-    var mapping = graft.CacheScope.persist(
+    val mapping0 = graft.CacheScope.persist(
       und.select(col("u").as("orig")).union(und.select(col("v")))
         .distinct().select(col("orig"), col("orig").as("node")))
-    var part: DataFrame = null
-    for (level <- 1 to maxLevels) {
-      // lineage-cut EVERY level boundary (the per-round rule one level
-      // up): a level references the previous level's partition, graph
-      // and refinement maps several times each, and the NESTED
-      // composition (moves inside aggregation inside moves) otherwise
-      // multiplies the logical tree past what plan stringification can
-      // hold — the same 3^iters fan-out the move rounds already cut.
-      // LAZY cuts (the louvainMoves treatment): the level count is
-      // FIXED and no per-level state is observed on the driver, so the
-      // plan truncates identically while the six per-level frames
-      // materialize with the next action (clusterPairs' sum test or the
-      // caller's) instead of one eager job each — pure scheduling saved
-      part = graft.CacheScope.lineageCutLazy(
-        louvainMoves(sym, selfW, moveRounds, checkpointDir, init),
-        checkpointDir)
-      if (level < maxLevels) {
-        // refine THIS level's partition into connected components over
-        // the level graph (one orientation of sym = each edge once)
-        val pu = part.select(col("node").as("u"), col("comm").as("_cu"))
-        val pv = part.select(col("node").as("v"), col("comm").as("_cv"))
-        val intra = sym.filter(col("u") < col("v"))
-          .join(pu, "u").join(pv, "v")
-          .filter(col("_cu") === col("_cv"))
-          .select("u", "v")
-        val cc = graft.operators.Dedup.clusterPairs(intra, "u", "v",
-          checkpointDir = checkpointDir)
-        val refined = graft.CacheScope.lineageCutLazy(
-          part.join(cc.select(col("id").as("node"), col("cluster_id")),
-              Seq("node"), "left")
-            .select(col("node"), col("comm"),
-              coalesce(col("cluster_id"), col("node")).as("ref")),
-          checkpointDir)
-        // aggregate on the REFINED partition
-        val ru = refined.select(col("node").as("u"), col("ref").as("_ru"))
-        val rv = refined.select(col("node").as("v"), col("ref").as("_rv"))
-        val tagged = sym.join(ru, "u").join(rv, "v")
-        val symNext = graft.CacheScope.lineageCutLazy(
-          tagged.filter(col("_ru") =!= col("_rv"))
-            .groupBy(col("_ru").as("u"), col("_rv").as("v"))
-            .agg(sum("w").as("w"))
-            .repartition(col("u")),
-          checkpointDir)
-        // self-loops: intra-refined edge mass (sym carries both
-        // orientations → /2) plus members' carried self-loops
-        val selfEdges = tagged.filter(col("_ru") === col("_rv"))
-          .groupBy(col("_ru").as("node"))
-          .agg(expr("sum(w) div 2L").as("_se"))
-        val selfNext = selfW match {
-          case None => selfEdges.select(col("node"), col("_se").as("sw"))
-          case Some(sw0) =>
-            val carried = refined.join(sw0, Seq("node"))
-              .groupBy(col("ref").as("node")).agg(sum("sw").as("_sc"))
-            selfEdges.join(carried, Seq("node"), "full")
-              .select(col("node"),
-                (coalesce(col("_se"), lit(0L)) +
-                  coalesce(col("_sc"), lit(0L))).as("sw"))
+    // per level: (partition, level graph, carried self-loops, starting
+    // partition, mapping). Every level boundary is cut (the per-round
+    // rule one level up): a level references the previous level's
+    // partition, graph and refinement maps several times each, and the
+    // NESTED composition (moves inside aggregation inside moves)
+    // otherwise multiplies the logical tree past what plan
+    // stringification can hold. The six per-level frames materialize
+    // with the next action (clusterPairs' sum test or the caller's).
+    val (part, _, _, _, mapping) = graft.Fixpoint.iterate("leidenCommunities",
+        (null: DataFrame, sym0, Option.empty[DataFrame], Option.empty[DataFrame],
+          mapping0), checkpointDir)(graft.Fixpoint.Fixed(maxLevels)) {
+      case ((_, sym, selfW, init, mapping), level, cut) =>
+        val part = cut(louvainMoves(sym, selfW, moveRounds, checkpointDir, init))
+        if (level == maxLevels) (part, sym, selfW, init, mapping)
+        else {
+          // refine THIS level's partition into connected components over
+          // the level graph (one orientation of sym = each edge once)
+          val pu = part.select(col("node").as("u"), col("comm").as("_cu"))
+          val pv = part.select(col("node").as("v"), col("comm").as("_cv"))
+          val intra = sym.filter(col("u") < col("v"))
+            .join(pu, "u").join(pv, "v")
+            .filter(col("_cu") === col("_cv"))
+            .select("u", "v")
+          val cc = graft.operators.Dedup.clusterPairs(intra, "u", "v",
+            checkpointDir = checkpointDir)
+          val refined = cut(
+            part.join(cc.select(col("id").as("node"), col("cluster_id")),
+                Seq("node"), "left")
+              .select(col("node"), col("comm"),
+                coalesce(col("cluster_id"), col("node")).as("ref")))
+          // aggregate on the REFINED partition
+          val ru = refined.select(col("node").as("u"), col("ref").as("_ru"))
+          val rv = refined.select(col("node").as("v"), col("ref").as("_rv"))
+          val tagged = sym.join(ru, "u").join(rv, "v")
+          val symNext = cut(
+            tagged.filter(col("_ru") =!= col("_rv"))
+              .groupBy(col("_ru").as("u"), col("_rv").as("v"))
+              .agg(sum("w").as("w"))
+              .repartition(col("u")))
+          // self-loops: intra-refined edge mass (sym carries both
+          // orientations → /2) plus members' carried self-loops
+          val selfEdges = tagged.filter(col("_ru") === col("_rv"))
+            .groupBy(col("_ru").as("node"))
+            .agg(expr("sum(w) div 2L").as("_se"))
+          val selfNext = selfW match {
+            case None => selfEdges.select(col("node"), col("_se").as("sw"))
+            case Some(sw0) =>
+              val carried = refined.join(sw0, Seq("node"))
+                .groupBy(col("ref").as("node")).agg(sum("sw").as("_sc"))
+              selfEdges.join(carried, Seq("node"), "full")
+                .select(col("node"),
+                  (coalesce(col("_se"), lit(0L)) +
+                    coalesce(col("_sc"), lit(0L))).as("sw"))
+          }
+          // next level resumes from the PARENT partition: every refined
+          // community keeps its move community (distinct is exact — all
+          // members of a refined community share one comm by construction)
+          val initNext = cut(
+            refined.select(col("ref").as("node"), col("comm")).distinct())
+          val selfWNext = cut(selfNext)
+          val mappingNext = cut(
+            mapping.join(refined.select(col("node"), col("ref")), Seq("node"))
+              .select(col("orig"), col("ref").as("node")))
+          (part, symNext, Some(selfWNext), Some(initNext), mappingNext)
         }
-        // next level resumes from the PARENT partition: every refined
-        // community keeps its move community (distinct is exact — all
-        // members of a refined community share one comm by construction)
-        init = Some(graft.CacheScope.lineageCutLazy(
-          refined.select(col("ref").as("node"), col("comm")).distinct(),
-          checkpointDir))
-        sym = symNext
-        selfW = Some(graft.CacheScope.lineageCutLazy(selfNext, checkpointDir))
-        mapping = graft.CacheScope.lineageCutLazy(
-          mapping.join(refined.select(col("node"), col("ref")), Seq("node"))
-            .select(col("orig"), col("ref").as("node")),
-          checkpointDir)
-      }
     }
     // project the last level's partition back to original nodes, then
     // the final well-connectedness repair on the ORIGINAL graph
@@ -604,23 +580,21 @@ object Analytics {
     val symD = graft.CacheScope.persist(
       sym.join(deg.select(col("node").as("u"), col("d")), Seq("u")))
     // the label frame carries d for the same reason
-    var labels = init match {
+    val labels0 = init match {
       case None => deg.select(col("node"), col("node").as("comm"), col("d"))
       case Some(p0) =>
         deg.join(p0.select(col("node"), col("comm")), Seq("node"), "left")
           .select(col("node"),
             coalesce(col("comm"), col("node")).as("comm"), col("d"))
     }
-    for (i <- 1 to rounds) {
-      // lineage-cut EVERY round: a round references the label frame ~4
-      // times, so skipping even one cut quadruples the replanned tree
-      // (measured: every-2nd-round cutting took wall from 14 s to 120 s
-      // at sf0.001 — the uncut reference fan-out dominates). LAZY cut:
-      // the plan truncates identically, but the rounds' label frames
-      // materialize with the caller's action instead of one eager job
-      // per round — the fixed cost that dominated the tiny-graph wall
-      // (measured at sf0.1: 9.2 s → ~6 s with the round count fixed)
-      val l = graft.CacheScope.lineageCutLazy(labels, checkpointDir)
+    val labels = graft.Fixpoint.iterate("louvainMoves", labels0, checkpointDir)(
+        graft.Fixpoint.Fixed(rounds)) { (prev, i, cut) =>
+      // cut EVERY round: a round references the label frame ~4 times, so
+      // skipping even one cut quadruples the replanned tree (measured:
+      // every-2nd-round cutting took wall from 14 s to 120 s at sf0.001
+      // — the uncut reference fan-out dominates). The lazy cut measured
+      // 9.2 s → ~6 s at sf0.1 against one eager job per round.
+      val l = cut(prev)
       val commDeg = l.groupBy("comm").agg(sum("d").as("_dc"))
       // k_{i→c}: edge mass from each node to each neighbor community,
       // plus the own-community candidate at k=0 (sum-merged if the node
@@ -637,7 +611,7 @@ object Analytics {
       // the current community rides the scored frame (the _own
       // candidate IS it), so the parity-gated adoption needs no second
       // join back against the label frame
-      labels = cands
+      cands
         .join(commDeg.withColumnRenamed("comm", "_cand"), Seq("_cand"))
         .crossJoin(broadcast(w2))
         .select(col("node"),
@@ -1243,7 +1217,7 @@ object Analytics {
    * can push a neighbor below k), so rounds repeat until the edge count
    * is stable; each round lineage-cuts (the pagerank 3^iters rule). A
    * graph peels in ≤ n rounds; real graphs take a handful — `maxIters`
-   * is a runaway bound (require-failed if hit, never silent).
+   * is a runaway bound (an error if hit, never silent).
    *
    * Self-loops and duplicate/reversed edges are normalized away (the
    * [[triangles]] rule), so degree = distinct-neighbor count. Returns
@@ -1253,32 +1227,25 @@ object Analytics {
             maxIters: Int = 50,
             checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1, s"kCore needs k >= 1, got $k")
-    var und = graft.CacheScope.persist(edges
+    val und0 = graft.CacheScope.persist(edges
       .select(least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .distinct())
-    var nEdges = und.count()
-    var stable = nEdges == 0L
-    var round = 0
-    while (!stable) {
-      round += 1
-      require(round <= maxIters,
-        s"kCore did not stabilize in $maxIters rounds ($nEdges edges live)")
-      val deg = und.select(col("u").as("n")).union(und.select(col("v")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-      val keep = deg.filter(col("d") >= k).select("n")
-      // LAZY cut: the stabilization count below is the round's single
-      // action and materializes the checkpoint blocks itself
-      val next = graft.CacheScope.lineageCutLazy(
-        und.join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
-          .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
-          .select("u", "v"),
-        checkpointDir)
-      val nNext = next.count()
-      stable = nNext == nEdges
-      nEdges = nNext
-      und = next
+    val n0 = und0.count()
+    // state: (live edges, their count, stable)
+    val (und, _, _) = graft.Fixpoint.iterate("kCore", (und0, n0, n0 == 0L),
+        checkpointDir)(graft.Fixpoint.Converge(maxIters, _._3)) {
+      case ((cur, nEdges, _), _, cut) =>
+        val deg = cur.select(col("u").as("n")).union(cur.select(col("v")))
+          .groupBy("n").agg(count(lit(1)).as("d"))
+        val keep = deg.filter(col("d") >= k).select("n")
+        val next = cut(
+          cur.join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
+            .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
+            .select("u", "v"))
+        val nNext = next.count()
+        (next, nNext, nNext == nEdges)
     }
     und.select(col("u").as("n")).union(und.select(col("v")))
       .groupBy("n").agg(count(lit(1)).as("degree"))
@@ -1871,20 +1838,23 @@ object Analytics {
       .filter(col("u").isNotNull && col("v").isNotNull &&
         col("w").isNotNull && col("u") =!= col("v"))
       .groupBy("u", "v").agg(min("w").as("w")))
-    var labels = graft.CacheScope.persist(
+    val labels0 = graft.CacheScope.persist(
       und.select(col("u").as("node")).union(und.select(col("v")))
         .distinct().withColumn("comp", col("node")))
-    // schema-inheriting empty accumulator (node ids keep their input type)
-    var picked: DataFrame = und.filter(lit(false))
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      val cu = labels.select(col("node").as("u"), col("comp").as("cu"))
-      val cv = labels.select(col("node").as("v"), col("comp").as("cv"))
-      val cross = graft.CacheScope.persist(
-        und.join(cu, "u").join(cv, "v").filter(col("cu") =!= col("cv")))
-      if (cross.isEmpty) { done = true }
-      else {
+    // the edges whose endpoints sit in different components; the loop is
+    // done when none is left
+    def crossing(labels: DataFrame): DataFrame = graft.CacheScope.persist(
+      und.join(labels.select(col("node").as("u"), col("comp").as("cu")), "u")
+        .join(labels.select(col("node").as("v"), col("comp").as("cv")), "v")
+        .filter(col("cu") =!= col("cv")))
+    // state: (labels, picked edges, crossing edges); the accumulator
+    // starts as a schema-inheriting empty frame (node ids keep their type)
+    val (_, picked, _) = graft.Fixpoint.iterate("minimumSpanningForest",
+        (labels0, und.filter(lit(false)), crossing(labels0)), checkpointDir)(
+        graft.Fixpoint.Converge(maxIter, _._3.isEmpty)) {
+      case ((labels, picked, cross), _, cut) =>
+        val cu = labels.select(col("node").as("u"), col("comp").as("cu"))
+        val cv = labels.select(col("node").as("v"), col("comp").as("cv"))
         // each component's lexicographic-min incident cross edge; min of
         // a struct orders by (w, u, v) — the tie perturbation
         val e = struct(col("w"), col("u"), col("v"))
@@ -1895,11 +1865,7 @@ object Analytics {
           .select(col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"))
           .distinct() // both endpoints' components may pick the same edge
         val pickedRound = graft.CacheScope.persist(minE)
-        // LAZY cut: nothing reads the accumulator mid-loop, so the
-        // plan-tree truncation is all that matters — the eager
-        // materialization job per round was pure fixed cost
-        picked = graft.CacheScope.lineageCutLazy(
-          picked.union(pickedRound), checkpointDir)
+        val pickedNext = cut(picked.union(pickedRound))
         // merge: CC over the picked edges' component pairs (a forest on
         // the component graph — tiny), then relabel every node
         val compPairs = pickedRound
@@ -1907,22 +1873,12 @@ object Analytics {
         val merged = graft.operators.Dedup.clusterPairs(
           compPairs, "cu", "cv", checkpointDir = checkpointDir)
           .select(col("id").as("comp"), col("cluster_id"))
-        // lazy for the same reason: the next round's cross.isEmpty is
-        // the first (and only) reader
-        labels = graft.CacheScope.lineageCutLazy(
+        val labelsNext = cut(
           labels.join(merged, Seq("comp"), "left")
             .select(col("node"),
-              coalesce(col("cluster_id"), col("comp")).as("comp")),
-          checkpointDir)
-      }
-      iter += 1
+              coalesce(col("cluster_id"), col("comp")).as("comp")))
+        (labelsNext, pickedNext, crossing(labelsNext))
     }
-    require(done || {
-      val cu = labels.select(col("node").as("u"), col("comp").as("cu"))
-      val cv = labels.select(col("node").as("v"), col("comp").as("cv"))
-      und.join(cu, "u").join(cv, "v").filter(col("cu") =!= col("cv")).isEmpty
-    }, s"minimumSpanningForest did not converge in $maxIter rounds — " +
-      "components halve per round, so this is a runaway, not a big graph")
     picked
   }
 
@@ -2159,33 +2115,26 @@ object Analytics {
         .repartition(col("src")))
     val spark = edges.sparkSession
     import spark.implicits._
-    var dist = sources.distinct.map(s => (s, 0.0)).toDF("node", "dist")
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val relaxed = dist
-        .join(sym, dist("node") === sym("src"))
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      // LAZY cut: the fixpoint probe below reads `next` and materializes
-      // the checkpoint blocks — the eager cut's job was duplicated work
-      val next = graft.CacheScope.lineageCutLazy(
-        dist.union(relaxed).groupBy("node").agg(min("dist").as("dist")),
-        checkpointDir)
-      // exact fixpoint test: a changed row is a NEW node (left-anti on the
-      // previous frontier) or a strictly smaller distance — distances are
-      // compared as the doubles they are, never summed, so a sub-ulp
-      // improvement can neither be absorbed nor invented
-      converged = next.alias("n")
-        .join(dist.select(col("node"), col("dist").as("_pd")), Seq("node"), "left")
-        .filter(col("_pd").isNull || col("dist") < col("_pd"))
-        .isEmpty
-      dist = next
-      iter += 1
-    }
-    require(converged,
-      s"shortestPaths did not converge in $maxIter rounds — raise maxIter " +
-        "if the graph's hop diameter really exceeds it")
-    dist
+    // state: (distances, converged)
+    graft.Fixpoint.iterate("shortestPaths",
+        (sources.distinct.map(s => (s, 0.0)).toDF("node", "dist"), false),
+        checkpointDir)(graft.Fixpoint.Converge(maxIter, _._2)) {
+      case ((dist, _), _, cut) =>
+        val relaxed = dist
+          .join(sym, dist("node") === sym("src"))
+          .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
+        val next = cut(
+          dist.union(relaxed).groupBy("node").agg(min("dist").as("dist")))
+        // exact fixpoint test: a changed row is a NEW node (left-anti on
+        // the previous frontier) or a strictly smaller distance —
+        // distances are compared as the doubles they are, never summed,
+        // so a sub-ulp improvement can neither be absorbed nor invented
+        val converged = next.alias("n")
+          .join(dist.select(col("node"), col("dist").as("_pd")), Seq("node"), "left")
+          .filter(col("_pd").isNull || col("dist") < col("_pd"))
+          .isEmpty
+        (next, converged)
+    }._1
   }
 
   /**
@@ -2354,24 +2303,21 @@ object Analytics {
         edges.sparkSession.range(0, walksPerNode).select(col("id").as("_w"))))
       .select(concat_ws(":", col("cur"), col("_w")).as("walk_id"),
         col("cur"))
-    var frontier = graft.CacheScope.persist(starts)
-    var out = starts.select(col("walk_id"), lit(0).as("step"),
-      col("cur").as("node"))
-    for (s <- 1 to walkLen) {
-      val nxt = frontier
-        .join(sym, col("cur") === col("src"))
-        .groupBy("walk_id")
-        .agg(min_by(col("dst"),
-          md5(concat_ws(":", lit(seed), col("walk_id"), lit(s), col("dst"))))
-          .as("cur"))
-      // LAZY cut: fixed walk length, no per-step driver observation —
-      // the consumer's one action runs every step as one job chain
-      frontier = graft.CacheScope.lineageCutLazy(nxt, checkpointDir)
-      out = out.union(
-        frontier.select(col("walk_id"), lit(s).as("step"),
-          col("cur").as("node")))
-    }
-    out
+    // state: (frontier, walk rows so far)
+    graft.Fixpoint.iterate("randomWalks",
+        (graft.CacheScope.persist(starts),
+          starts.select(col("walk_id"), lit(0).as("step"), col("cur").as("node"))),
+        checkpointDir)(graft.Fixpoint.Fixed(walkLen)) {
+      case ((frontier, out), s, cut) =>
+        val next = cut(frontier
+          .join(sym, col("cur") === col("src"))
+          .groupBy("walk_id")
+          .agg(min_by(col("dst"),
+            md5(concat_ws(":", lit(seed), col("walk_id"), lit(s), col("dst"))))
+            .as("cur")))
+        (next, out.union(
+          next.select(col("walk_id"), lit(s).as("step"), col("cur").as("node"))))
+    }._2
   }
 
   /**
@@ -2404,28 +2350,21 @@ object Analytics {
           col("src") =!= col("dst"))
         .distinct()
         .repartition(col("src")))
-    var visited = graft.CacheScope.lineageCutLazy(
-      seeds.select(col(seedCol).as("node")).distinct()
-        .withColumn("hops", lit(0)), checkpointDir)
-    var frontier = visited.select("node")
-    var h = 0
-    // the per-ring emptiness probe is a driver action over the (node-
-    // sized, persisted) frontier — bounded by maxHops, never the corpus.
-    // Both per-ring cuts are LAZY: the probe materializes the new
-    // frontier (and transitively the previous ring's visited blocks), so
-    // each ring pays exactly ONE action instead of three — the plan
-    // trees truncate identically either way
-    while (h < maxHops && !frontier.isEmpty) {
-      h += 1
-      val nxt = frontier.join(e, frontier("node") === e("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(visited.select("node"), Seq("node"), "left_anti")
-      frontier = graft.CacheScope.lineageCutLazy(nxt, checkpointDir)
-      visited = graft.CacheScope.lineageCutLazy(
-        visited.unionByName(frontier.withColumn("hops", lit(h))),
-        checkpointDir)
-    }
-    visited
+    // state: (visited, frontier). The seed ring is cut up front (the
+    // seeds frame is the caller's plan); the per-ring emptiness probe is
+    // a driver action over the (node-sized) frontier — bounded by
+    // maxHops, never the corpus — and is each ring's one action
+    val visited0 = graft.Fixpoint.seed(
+      seeds.select(col(seedCol).as("node")).distinct().withColumn("hops", lit(0)),
+      checkpointDir)
+    graft.Fixpoint.iterate("bfsHops", (visited0, visited0.select("node")),
+        checkpointDir)(graft.Fixpoint.Cap(maxHops, _._2.isEmpty)) {
+      case ((visited, frontier), h, cut) =>
+        val next = cut(frontier.join(e, frontier("node") === e("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(visited.select("node"), Seq("node"), "left_anti"))
+        (cut(visited.unionByName(next.withColumn("hops", lit(h)))), next)
+    }._1
   }
 
   /**
@@ -2637,23 +2576,18 @@ object Analytics {
           col("src") =!= col("dst"))
         .distinct()
         .repartition(col("src")))
-    var visited = graft.CacheScope.lineageCutLazy(
+    // state: (visited, frontier) — the bfsHops loop
+    val visited0 = graft.Fixpoint.seed(
       seeds.select(col(originCol).as("origin"), col(nodeCol).as("node"))
         .distinct().withColumn("hops", lit(0)), checkpointDir)
-    var frontier = visited.select("origin", "node")
-    var h = 0
-    // LAZY per-ring cuts, one action per ring — the bfsHops treatment
-    while (h < maxHops && !frontier.isEmpty) {
-      h += 1
-      val nxt = frontier.join(e, frontier("node") === e("src"))
-        .select(col("origin"), col("dst").as("node")).distinct()
-        .join(visited.select("origin", "node"), Seq("origin", "node"), "left_anti")
-      frontier = graft.CacheScope.lineageCutLazy(nxt, checkpointDir)
-      visited = graft.CacheScope.lineageCutLazy(
-        visited.unionByName(frontier.withColumn("hops", lit(h))),
-        checkpointDir)
-    }
-    visited
+    graft.Fixpoint.iterate("landmarkHops", (visited0, visited0.select("origin", "node")),
+        checkpointDir)(graft.Fixpoint.Cap(maxHops, _._2.isEmpty)) {
+      case ((visited, frontier), h, cut) =>
+        val next = cut(frontier.join(e, frontier("node") === e("src"))
+          .select(col("origin"), col("dst").as("node")).distinct()
+          .join(visited.select("origin", "node"), Seq("origin", "node"), "left_anti"))
+        (cut(visited.unionByName(next.withColumn("hops", lit(h)))), next)
+    }._1
   }
 
   /**

@@ -507,6 +507,8 @@ object Dedup {
    * so the loop is short; each round is one shuffle join + aggregation,
    * and `localCheckpoint` caps lineage growth so round N doesn't replay
    * rounds 1..N-1. Only nodes that appear in some pair are emitted.
+   * Labels not converged after `maxIter` rounds are an error, never a
+   * partial answer.
    */
   def clusterPairs(pairs: DataFrame, aCol: String, bCol: String,
                    maxIter: Int = 20,
@@ -525,7 +527,7 @@ object Dedup {
         .repartition(col("src")))
     // round 0 fused into initialization: lbl = min(id, direct neighbors)
     // — one aggregation instead of a full join round
-    var labels = graft.CacheScope.persist(
+    val labels0 = graft.CacheScope.persist(
       edges.groupBy("src").agg(min("dst").as("m"))
         .select(col("src").as("id"), least(col("src"), col("m")).as("lbl")))
     // labels only ever DECREASE under min-propagation, so for integral id
@@ -538,7 +540,7 @@ object Dedup {
     // a non-empty frame — fall back to an exact changed-label check.
     val sumSafe = {
       import org.apache.spark.sql.types._
-      labels.schema("lbl").dataType match {
+      labels0.schema("lbl").dataType match {
         case ByteType | ShortType | IntegerType | LongType => true
         case d: DecimalType if d.scale == 0 => true
         case _ => false
@@ -556,60 +558,54 @@ object Dedup {
     def anyLabelChanged(prev: DataFrame, next: DataFrame): Boolean =
       !next.join(prev.withColumnRenamed("lbl", "prev_lbl"), "id")
         .filter(col("lbl") =!= col("prev_lbl")).isEmpty
-    var prevSum = if (sumSafe) labelSum(labels) else None
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // each node's new label: min over own label and all neighbors' —
-      // a union + one partial-agg groupBy (no per-round left join)
-      val prop = edges.join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("lbl"))
-      // EVERY round cuts lineage (localCheckpoint, or reliable files when
-      // checkpointDir is given — executor loss then replays from storage):
-      // nextRound references `labels` TWICE (union + prop), so a plain
-      // persist leaves a 2^rounds logical plan — harmless physically but
-      // the final action's plan STRING alone OOMs the driver once the
-      // loop runs long (hit at the sf1 tier by long ER match chains; the
-      // pagerank 3^iters rule, same medicine). The cut stays EAGER here
-      // deliberately: the lazy variant (convergence aggregate materializes
-      // the blocks) was measured WORSE across this loop's consumers in
-      // full-bench context (q_dendrogram 5.5→6.4-9.0 s, q_image_neardup
-      // 1.2→2.2, q_er_entities 0.4→1.0 at 32 cores) — the aggregate job
-      // re-enters the round plan's AQE stages instead of reading cached
-      // blocks, unlike the fixed-round loops where lazy cuts won.
-      val nextRound = labels.union(prop).groupBy("id").agg(min("lbl").as("lbl"))
-      // POINTER SHORTCUT (path halving): also adopt the label OF the
-      // label — lbl is itself a node id in this table, and min-labels
-      // only point downward, so label(label(u)) is reachable from u by
-      // transitivity. Neighbor propagation alone walks ONE hop per
-      // round (O(diameter) rounds — an 80-long ER match chain pays 80
-      // rounds); with the shortcut chains halve every round and the
-      // loop converges in O(log diameter). Same monotone descent, same
-      // fixpoint, one extra id-sized equi-join per round.
-      val parent = nextRound
-        .select(col("id").as("lbl"), col("lbl").as("plbl"))
-      val shortcut = nextRound.join(parent, Seq("lbl"), "left")
-        .select(col("id"),
-          least(col("lbl"), coalesce(col("plbl"), col("lbl"))).as("lbl"))
-      val updated = graft.CacheScope.lineageCut(shortcut, checkpointDir)
-      converged = if (sumSafe) {
-        val newSum = labelSum(updated) // also materializes the cache
-        val c = (newSum, prevSum) match {
-          case (Some(a), Some(b)) => a.compareTo(b) == 0
-          case _ => !anyLabelChanged(labels, updated)
+    // state: (labels, their sum when sum-safe, converged)
+    val (labels, _, _) = graft.Fixpoint.iterate("clusterPairs",
+        (labels0, if (sumSafe) labelSum(labels0) else None, false),
+        checkpointDir,
+        // EAGER cut, deliberately: the lazy variant (convergence
+        // aggregate materializes the blocks) was measured WORSE across
+        // this loop's consumers in full-bench context (q_dendrogram
+        // 5.5→6.4-9.0 s, q_image_neardup 1.2→2.2, q_er_entities 0.4→1.0
+        // at 32 cores) — the aggregate job re-enters the round plan's
+        // AQE stages instead of reading cached blocks, unlike the
+        // fixed-round loops where lazy cuts won.
+        eager = true)(graft.Fixpoint.Converge(maxIter, _._3)) {
+      case ((labels, prevSum, _), _, cut) =>
+        // each node's new label: min over own label and all neighbors' —
+        // a union + one partial-agg groupBy (no per-round left join)
+        val prop = edges.join(labels.withColumnRenamed("id", "src"), "src")
+          .select(col("dst").as("id"), col("lbl"))
+        // cut EVERY round: nextRound references `labels` TWICE (union +
+        // prop), so a plain persist leaves a 2^rounds logical plan whose
+        // plan STRING alone OOMs the driver once the loop runs long (hit
+        // at the sf1 tier by long ER match chains)
+        val nextRound = labels.union(prop).groupBy("id").agg(min("lbl").as("lbl"))
+        // POINTER SHORTCUT (path halving): also adopt the label OF the
+        // label — lbl is itself a node id in this table, and min-labels
+        // only point downward, so label(label(u)) is reachable from u by
+        // transitivity. Neighbor propagation alone walks ONE hop per
+        // round (O(diameter) rounds — an 80-long ER match chain pays 80
+        // rounds); with the shortcut chains halve every round and the
+        // loop converges in O(log diameter). Same monotone descent, same
+        // fixpoint, one extra id-sized equi-join per round.
+        val parent = nextRound
+          .select(col("id").as("lbl"), col("lbl").as("plbl"))
+        val shortcut = nextRound.join(parent, Seq("lbl"), "left")
+          .select(col("id"),
+            least(col("lbl"), coalesce(col("plbl"), col("lbl"))).as("lbl"))
+        val updated = cut(shortcut)
+        val (newSum, converged) = if (sumSafe) {
+          val newSum = labelSum(updated) // also materializes the cache
+          (newSum, (newSum, prevSum) match {
+            case (Some(a), Some(b)) => a.compareTo(b) == 0
+            case _ => !anyLabelChanged(labels, updated)
+          })
+        } else {
+          (None, !anyLabelChanged(labels, updated)) // materializes via the join action
         }
-        prevSum = newSum
-        c
-      } else {
-        !anyLabelChanged(labels, updated) // materializes via the join action
-      }
-      labels.unpersist(false)
-      labels = updated
-      iter += 1
+        labels.unpersist(false)
+        (updated, newSum, converged)
     }
-    if (sys.env.contains("GRAFT_LOOP_DEBUG"))
-      System.err.println(s"[loop] clusterPairs($aCol,$bCol): $iter rounds, " +
-        s"converged=$converged")
     labels.select(col("id"), col("lbl").as("cluster_id"))
   }
 

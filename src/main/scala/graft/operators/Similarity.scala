@@ -404,8 +404,8 @@ object Similarity {
    * cell, and the per-round mean is a partial-agg'd (cell, dim) average
    * — the scale-correct shape (components pre-sum per partition; no
    * per-round collect). Each round is one broadcast-assign join + one
-   * groupBy; lineage is cut per round ([[graft.CacheScope.lineageCut]],
-   * reliable under `checkpointDir`) exactly like pagerank. A cell that
+   * groupBy; lineage is cut per round ([[graft.Fixpoint]], reliable
+   * under `checkpointDir`) exactly like pagerank. A cell that
    * loses every member drops out (classic Lloyd). Emits the fitted
    * centroids in engine-portable row form (cell, dim [1-based], mean).
    */
@@ -459,8 +459,8 @@ object Similarity {
    * partial-agg'd per-dim mean, per-round lineage cut). */
   private def lloydLoop(base: DataFrame, init: DataFrame, iters: Int,
                         checkpointDir: Option[String]): DataFrame = {
-    var cent = init
-    for (_ <- 1 to iters) {
+    val cent = graft.Fixpoint.iterate("lloydLoop", init, checkpointDir)(
+        graft.Fixpoint.Fixed(iters)) { (cent, _, cut) =>
       // argmin ‖v−c‖² ≡ argmin (c·c − 2·v·c): the ‖v‖² term is constant
       // per row, and this form runs on the CODEGEN DotProduct kernel —
       // a zip_with/aggregate lambda is interpreted (HigherOrderFunction
@@ -477,10 +477,7 @@ object Similarity {
         .groupBy("cell")
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
           s => s.getField("m")).as("c"))
-      // LAZY cut: fixed iters, no per-round driver state — one consumer
-      // action materializes the whole refinement chain (blocks still
-      // cache at first compute, so the broadcast and next round share)
-      cent = graft.CacheScope.lineageCutLazy(next, checkpointDir)
+      cut(next)
     }
     cent.select(col("cell"), posexplode(col("c")).as(Seq("dim", "mean")))
       .select(col("cell"), (col("dim") + 1).as("dim"), col("mean"))
@@ -1352,19 +1349,17 @@ object Similarity {
       .orderBy("h").limit(ks)
       .withColumn("cell", (hRank - 1).cast("int"))
       .select("id", "cell")
-    var cent = sv.join(broadcast(picked), "id")
+    val cent0 = sv.join(broadcast(picked), "id")
       .select(col("sub"), col("cell"), col("vs").as("c"))
       .withColumn("c2", dot(col("c"), col("c")))
-    for (_ <- 1 to iters) {
+    graft.Fixpoint.iterate("pqTrain", cent0, checkpointDir)(
+        graft.Fixpoint.Fixed(iters)) { (cent, _, cut) =>
       val next = pqAssign(sv, cent)
         .select(col("sub"), col("cell"), posexplode(col("vs")).as(Seq("dim", "x")))
         .groupBy("sub", "cell", "dim").agg(avg("x").as("mean"))
-      // LAZY cut (fixed iters — the lloydLoop treatment)
-      cent = pqCentArrays(graft.CacheScope.lineageCutLazy(next
-        .select(col("sub"), col("cell"), (col("dim") + 1).as("dim"), col("mean")),
-        checkpointDir))
+      pqCentArrays(cut(next
+        .select(col("sub"), col("cell"), (col("dim") + 1).as("dim"), col("mean"))))
     }
-    cent
   }
 
   /**
@@ -2090,9 +2085,10 @@ object Similarity {
     val sym = graft.CacheScope.persist(
       und.union(und.select(col("_b").as("_a"), col("_a").as("_b")))
         .distinct().repartition(col("_a")))
-    var cur = feats.select(col(idCol).as("_id"),
+    val feats0 = feats.select(col(idCol).as("_id"),
       col(vecCol).cast("array<double>").as("_v"))
-    for (_ <- 1 to hops) {
+    val out = graft.Fixpoint.iterate("featurePropagate", feats0, checkpointDir)(
+        graft.Fixpoint.Fixed(hops)) { (cur, _, cut) =>
       // neighbor cells: edge (dst=_a receives from src=_b)
       val nbr = sym
         .join(cur.select(col("_id").as("_b"), col("_v").as("_nv")), "_b")
@@ -2101,17 +2097,14 @@ object Similarity {
         .groupBy("_id")
         .agg(transform(array_sort(collect_list(struct(col("_p"), col("_m")))),
           s => s.getField("_m")).as("_nbr"))
-      // LAZY cut (fixed hops — the lloydLoop treatment)
-      cur = graft.CacheScope.lineageCutLazy(
-        cur.join(nbr, Seq("_id"), "left")
-          .select(col("_id"),
-            when(col("_nbr").isNull, col("_v"))
-              .otherwise(zip_with(col("_v"), col("_nbr"),
-                (o, n) => lit(selfWeight) * o + lit(1 - selfWeight) * n))
-              .as("_v")),
-        checkpointDir)
+      cut(cur.join(nbr, Seq("_id"), "left")
+        .select(col("_id"),
+          when(col("_nbr").isNull, col("_v"))
+            .otherwise(zip_with(col("_v"), col("_nbr"),
+              (o, n) => lit(selfWeight) * o + lit(1 - selfWeight) * n))
+            .as("_v")))
     }
-    cur.select(col("_id").as(idCol), col("_v").as("v_out"))
+    out.select(col("_id").as(idCol), col("_v").as("v_out"))
   }
 
   /**

@@ -964,34 +964,27 @@ object Text {
           rankCols.indices.map(i => col(s"_l$i")): _*))
         .select(carry.map(col) :+ col("pair"): _*)
     }
-    var r = base
-    var rankCols = Seq("ra")
-    var w = 1
-    while (w * 2 <= minLen) {
-      val p = paired(r, rankCols, w)
-      // distinct pair classes → injective representative: each (id,pos)
-      // sits in exactly one class, so the class minimum never collides
-      if (packable) {
-        val reps = p.groupBy("pair").agg(min(gid).as("rank"))
-        // LAZY cut: doubling-round count is fixed by minLen, nothing
-        // reads per-round state on the driver — the caller's one action
-        // runs all rounds as one job chain
-        r = graft.CacheScope.lineageCutLazy(
-          p.join(reps, Seq("pair"))
-            .select(carry.map(col) :+ col("rank").as("ra"): _*),
-          checkpointDir)
-        rankCols = Seq("ra")
-      } else {
-        val reps = p.groupBy("pair")
-          .agg(min(struct(col("id"), col("pos"))).as("rank"))
-        r = graft.CacheScope.lineageCutLazy(
-          p.join(reps, Seq("pair"))
+    // doubling rounds: round i pairs ranks of width w = 2^(i-1) into
+    // width 2w, for as long as 2w <= minLen
+    val doublings = Iterator.iterate(1)(_ * 2).takeWhile(_ * 2 <= minLen).size
+    val w = 1 << doublings
+    val (r, rankCols) = graft.Fixpoint.iterate("suffixSpans", (base, Seq("ra")),
+        checkpointDir)(graft.Fixpoint.Fixed(doublings)) {
+      case ((r, rankCols), i, cut) =>
+        val p = paired(r, rankCols, 1 << (i - 1))
+        // distinct pair classes → injective representative: each (id,pos)
+        // sits in exactly one class, so the class minimum never collides
+        if (packable) {
+          val reps = p.groupBy("pair").agg(min(gid).as("rank"))
+          (cut(p.join(reps, Seq("pair"))
+            .select(carry.map(col) :+ col("rank").as("ra"): _*)), Seq("ra"))
+        } else {
+          val reps = p.groupBy("pair")
+            .agg(min(struct(col("id"), col("pos"))).as("rank"))
+          (cut(p.join(reps, Seq("pair"))
             .select(col("id"), col("len"), col("pos"),
-              col("rank.id").as("ra"), col("rank.pos").as("rb")),
-          checkpointDir)
-        rankCols = Seq("ra", "rb")
-      }
-      w *= 2
+              col("rank.id").as("ra"), col("rank.pos").as("rb"))), Seq("ra", "rb"))
+        }
     }
     // width-minLen equality key: the two overlapping width-w windows
     val keyed =

@@ -412,7 +412,7 @@ object Trajectory {
     val w = Window.partitionBy(kc: _*)
     val o = col(orderCol)
     // init: one segment per trajectory, spanning first..last point
-    var pts = graft.CacheScope.persist(df
+    val pts0 = graft.CacheScope.persist(df
       .withColumn("_so", min(o).over(w))
       .withColumn("_eo", max(o).over(w))
       .withColumn("_sx", min(struct(o, col(xCol))).over(w).getField(xCol))
@@ -420,9 +420,9 @@ object Trajectory {
       .withColumn("_ex", max(struct(o, col(xCol))).over(w).getField(xCol))
       .withColumn("_ey", max(struct(o, col(yCol))).over(w).getField(yCol))
       .withColumn("_kept", o === col("_so") || o === col("_eo")))
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
+    // per segment: the max-deviation interior point over epsilon (ties →
+    // lowest order) — the split decisions; none left means done
+    def splitsOf(pts: DataFrame): DataFrame = {
       val x = col(xCol); val y = col(yCol)
       val dx = col("_ex") - col("_sx"); val dy = col("_ey") - col("_sy")
       val chord = sqrt(dx * dx + dy * dy)
@@ -430,8 +430,7 @@ object Trajectory {
         sqrt((x - col("_sx")) * (x - col("_sx")) +
           (y - col("_sy")) * (y - col("_sy"))))
         .otherwise(abs(dx * (col("_sy") - y) - (col("_sx") - x) * dy) / chord)
-      // per segment: the max-deviation interior point (ties → lowest order)
-      val splits = pts.filter(!col("_kept"))
+      pts.filter(!col("_kept"))
         .withColumn("_dev", dev)
         .filter(col("_dev") > epsilon)
         .groupBy(kc :+ col("_so").as("_so"): _*)
@@ -439,15 +438,16 @@ object Trajectory {
           x.as("_x"), y.as("_y"))).as("_m"))
         .select(kc ++ Seq(col("_so"), col("_m._o").as("_po"),
           col("_m._x").as("_px"), col("_m._y").as("_py")): _*)
-      if (splits.isEmpty) { done = true }
-      else {
-        // split decisions are segment-sized (≤ kept points) — an equi-join
-        // on (keys, _so); AQE picks broadcast when the frame is small.
-        // Each point adopts its half map-side: left of the split keeps
-        // (s → p), right takes (p → e), the split point itself is kept.
-        // LAZY cut: next round's splits.isEmpty probe (or the caller's
-        // action) materializes the blocks — one action per round
-        pts = graft.CacheScope.lineageCutLazy(
+    }
+    // state: (points, their split decisions)
+    val (pts, _) = graft.Fixpoint.iterate("simplify", (pts0, splitsOf(pts0)),
+        checkpointDir)(graft.Fixpoint.Converge(maxIter, _._2.isEmpty)) {
+      case ((pts, splits), _, cut) =>
+        // split decisions are segment-sized (≤ kept points) — an
+        // equi-join on (keys, _so); AQE picks broadcast when the frame is
+        // small. Each point adopts its half map-side: left of the split
+        // keeps (s → p), right takes (p → e), the split point is kept.
+        val next = cut(
           pts.join(splits, keyCols :+ "_so", "left")
             .select((df.columns.map(col) ++ Seq(
               when(col("_po").isNotNull && o > col("_po"), col("_po"))
@@ -463,14 +463,9 @@ object Trajectory {
               when(col("_po").isNotNull && o < col("_po"), col("_py"))
                 .otherwise(col("_ey")).as("_ey"),
               (col("_kept") || (col("_po").isNotNull && o === col("_po")))
-                .as("_kept"))): _*),
-          checkpointDir)
-      }
-      iter += 1
+                .as("_kept"))): _*))
+        (next, splitsOf(next))
     }
-    require(done, s"simplify did not converge in $maxIter rounds — " +
-      "split-tree depth exceeded the bound (adversarial ordering?); " +
-      "raise maxIter explicitly if the trajectory really is that deep")
     pts.filter(col("_kept"))
       .select(df.columns.map(col): _*)
   }

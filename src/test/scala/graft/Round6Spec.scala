@@ -197,6 +197,36 @@ class Round6Spec extends SparkSpecBase {
     assert(new java.io.File(dir).listFiles.nonEmpty, "no checkpoint files written")
   }
 
+  test("pagerank with a reliable checkpointDir caches each round's rank frame once") {
+    // the lazy reliable cut persists a round's frame before marking it,
+    // so the round's readers (contribution join, dangling aggregate) and
+    // the checkpoint write share one evaluation of it instead of each
+    // recomputing the frame; the blocks go when the scope exits
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    // a graph no other test builds: a frame persisted by an earlier
+    // unscoped call on equal data would serve these plans instead
+    val edges = Seq((1L, 2L, 1.0), (2L, 3L, 2.0), (3L, 1L, 1.0), (5L, 1L, 0.25))
+      .toDF("s", "d", "w")
+    val iters = 4
+    val base = org.apache.spark.sql.CacheManagerProbe.entries(spark)
+    def run(ck: Option[String]) = {
+      var cached = 0
+      val ranks = CacheScope.scoped {
+        val df = Analytics.pagerank(edges, "s", "d", Some("w"), iters = iters,
+          checkpointDir = ck)
+        cached = org.apache.spark.sql.CacheManagerProbe.entries(spark) - base
+        df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      }
+      assert(org.apache.spark.sql.CacheManagerProbe.entries(spark) === base,
+        "a round frame outlived the scope")
+      (cached, ranks)
+    }
+    val (local, localRanks) = run(None)
+    val (reliable, reliableRanks) = run(Some(dir))
+    assert(reliable - local === iters, "each round's frame is cached once")
+    assert(reliableRanks === localRanks)
+  }
+
   // --- corrMatrix pairwise-complete semantics ---------------------------------------
 
   test("corrMatrix restricts each pair's stddevs to pairwise-complete rows") {
