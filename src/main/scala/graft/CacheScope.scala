@@ -132,13 +132,19 @@ object SharedStage {
       // (paths are unique) so cancellation can't occur
       var sum = 0L
       var xor = 0L
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        val h = scala.util.hashing.MurmurHash3.stringHash(
-          s"${f.getPath}#${f.getLen}#${f.getModificationTime}").toLong
-        sum += h; xor ^= h
+      // listStatus, not listFiles: listFiles' LocatedFileStatus loads
+      // permissions, which the local filesystem without Hadoop native IO
+      // does by forking `ls -ld` per file; only path, length and mtime
+      // are read here
+      def walk(dir: Path): Unit = fs.listStatus(dir).foreach { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else {
+          val h = scala.util.hashing.MurmurHash3.stringHash(
+            s"${f.getPath}#${f.getLen}#${f.getModificationTime}").toLong
+          sum += h; xor ^= h
+        }
       }
+      walk(p)
       s"${java.lang.Long.toHexString(sum)}:${java.lang.Long.toHexString(xor)}"
     }
   }

@@ -40,6 +40,20 @@ import org.apache.spark.sql.DataFrame
  * with their executor — acceptable in local mode and for
  * cheap-to-rerun loops.
  *
+ * ENTRY CUT. A frame that every round reads enters the loop through
+ * [[entryCut]] (a BFS seed ring, clusterPairs' pair source), not
+ * through a persist of the caller's plan. A persisted frame stays in
+ * every plan as an InMemoryRelation that carries its whole upstream
+ * plan, and AQE posts the full plan description — each nested cached
+ * plan printed inside it, Final and Initial — at every stage completion
+ * of every round; a caller's chain of persisted frames grows that text
+ * about 4× per level of nesting, until building plan strings is most
+ * of the driver's time. The cut leaf prints as one line. It reports no
+ * output partitioning, though, so a frame whose partitioning the rounds
+ * reuse (clusterPairs' `repartition(src)` edge table) is persisted OVER
+ * the cut instead: its cached plan is then a few lines, and the rounds'
+ * joins still need no exchange on its side.
+ *
  * EXHAUSTION. A loop names its policy: [[Fixed]] runs exactly n rounds
  * and never probes; [[Cap]] stops early when its probe reports done and
  * returns normally at n, because n is part of the answer (bfsHops'
@@ -107,10 +121,11 @@ object Fixpoint {
     state
   }
 
-  /** The lazy cut applied to a probed loop's seed frame before
-   * [[iterate]], so the first probe reads (and materialises) the cut
-   * seed ring, as every later probe reads its round's cut frame. */
-  private[graft] def seed(df: DataFrame, checkpointDir: Option[String]): DataFrame =
+  /** The lazy cut applied to a frame before it enters [[iterate]] (see
+   * ENTRY CUT in the object doc): bfsHops' and landmarkHops' seed rings,
+   * clusterPairs' pair source. The frame's first reader materialises
+   * its blocks; every later reader, each round included, reads them. */
+  private[graft] def entryCut(df: DataFrame, checkpointDir: Option[String]): DataFrame =
     lineageCut(df, checkpointDir, eager = false)
 
   private def lineageCut(df: DataFrame, dir: Option[String],

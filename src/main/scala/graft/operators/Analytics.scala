@@ -2354,7 +2354,7 @@ object Analytics {
     // seeds frame is the caller's plan); the per-ring emptiness probe is
     // a driver action over the (node-sized) frontier — bounded by
     // maxHops, never the corpus — and is each ring's one action
-    val visited0 = graft.Fixpoint.seed(
+    val visited0 = graft.Fixpoint.entryCut(
       seeds.select(col(seedCol).as("node")).distinct().withColumn("hops", lit(0)),
       checkpointDir)
     graft.Fixpoint.iterate("bfsHops", (visited0, visited0.select("node")),
@@ -2577,7 +2577,7 @@ object Analytics {
         .distinct()
         .repartition(col("src")))
     // state: (visited, frontier) — the bfsHops loop
-    val visited0 = graft.Fixpoint.seed(
+    val visited0 = graft.Fixpoint.entryCut(
       seeds.select(col(originCol).as("origin"), col(nodeCol).as("node"))
         .distinct().withColumn("hops", lit(0)), checkpointDir)
     graft.Fixpoint.iterate("landmarkHops", (visited0, visited0.select("origin", "node")),

@@ -513,15 +513,18 @@ object Dedup {
   def clusterPairs(pairs: DataFrame, aCol: String, bCol: String,
                    maxIter: Int = 20,
                    checkpointDir: Option[String] = None): DataFrame = {
-    // persist the pair source first: the symmetric union below reads it
-    // twice, and `pairs` is typically an expensive similarity join
-    val p = graft.CacheScope.persist(
-      pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
-    // symmetric edges, pre-partitioned by src and cached: every round's
-    // propagation join reuses this partitioning — the (big) edge table is
-    // shuffled ONCE for the whole loop, not once per round. No distinct:
-    // min-propagation is idempotent under duplicate edges, so deduping
-    // billions of edges would buy nothing for a full extra shuffle.
+    // the pair source enters through the entry cut (see Fixpoint's ENTRY
+    // CUT): the symmetric union below reads it twice, and `pairs` is
+    // typically an expensive similarity join whose cached plan would
+    // otherwise be re-printed by AQE at every stage of every round
+    val p = graft.Fixpoint.entryCut(
+      pairs.select(col(aCol).as("src"), col(bCol).as("dst")), checkpointDir)
+    // symmetric edges, pre-partitioned by src and cached over the cut:
+    // every round's propagation join reuses this partitioning — the
+    // (big) edge table is shuffled ONCE for the whole loop, not once per
+    // round. No distinct: min-propagation is idempotent under duplicate
+    // edges, so deduping billions of edges would buy nothing for a full
+    // extra shuffle.
     val edges = graft.CacheScope.persist(
       p.union(p.select(col("dst").as("src"), col("src").as("dst")))
         .repartition(col("src")))
