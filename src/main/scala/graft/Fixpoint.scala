@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /**
  * The one driver for graft's iterative operators: every round loop
@@ -40,19 +40,24 @@ import org.apache.spark.sql.DataFrame
  * with their executor — acceptable in local mode and for
  * cheap-to-rerun loops.
  *
- * ENTRY CUT. A frame that every round reads enters the loop through
- * [[entryCut]] (a BFS seed ring, clusterPairs' pair source), not
- * through a persist of the caller's plan. A persisted frame stays in
- * every plan as an InMemoryRelation that carries its whole upstream
- * plan, and AQE posts the full plan description — each nested cached
- * plan printed inside it, Final and Initial — at every stage completion
- * of every round; a caller's chain of persisted frames grows that text
- * about 4× per level of nesting, until building plan strings is most
- * of the driver's time. The cut leaf prints as one line. It reports no
- * output partitioning, though, so a frame whose partitioning the rounds
- * reuse (clusterPairs' `repartition(src)` edge table) is persisted OVER
- * the cut instead: its cached plan is then a few lines, and the rounds'
- * joins still need no exchange on its side.
+ * LOOP INPUT. Every frame the rounds read that comes from outside the
+ * loop — a caller's argument, or an earlier loop's output — enters
+ * through [[input]], never through a persist of the caller's plan. A
+ * persisted frame stays in every plan as an InMemoryRelation that
+ * carries its whole upstream plan, and AQE posts the full plan
+ * description — each nested cached plan printed inside it, Final and
+ * Initial — at every stage completion of every round; a caller's chain
+ * of persisted frames grows that text about 4× per level of nesting,
+ * until building plan strings is most of the driver's time. [[input]]
+ * applies the loop's lazy cut, whose leaf prints as one line. A cut
+ * leaf reports no output partitioning (`UnknownPartitioning(0)` on
+ * Spark 4.1), so a frame whose partitioning the rounds reuse (an edge
+ * table keyed by its join column) names its partition columns and is
+ * persisted as a `repartition` OVER the cut: its cached plan is a few
+ * lines, and the rounds' joins need no exchange on its side. Frames
+ * built from an input may be persisted freely — their plans start at
+ * the cut. An initial state that only the first round reads needs no
+ * input: that round's cut drops its plan.
  *
  * EXHAUSTION. A loop names its policy: [[Fixed]] runs exactly n rounds
  * and never probes; [[Cap]] stops early when its probe reports done and
@@ -121,12 +126,17 @@ object Fixpoint {
     state
   }
 
-  /** The lazy cut applied to a frame before it enters [[iterate]] (see
-   * ENTRY CUT in the object doc): bfsHops' and landmarkHops' seed rings,
-   * clusterPairs' pair source. The frame's first reader materialises
-   * its blocks; every later reader, each round included, reads them. */
-  private[graft] def entryCut(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    lineageCut(df, checkpointDir, eager = false)
+  /** The one way a frame enters a loop (see LOOP INPUT in the object
+   * doc): the lazy cut of `df`, reliable under `checkpointDir`; with
+   * `partitionBy` columns, a persisted `repartition` over that cut. The
+   * frame's first reader materialises its blocks; every later reader,
+   * each round included, reads them. */
+  def input(df: DataFrame, checkpointDir: Option[String],
+            partitionBy: Column*): DataFrame = {
+    val leaf = lineageCut(df, checkpointDir, eager = false)
+    if (partitionBy.isEmpty) leaf
+    else CacheScope.persist(leaf.repartition(partitionBy: _*))
+  }
 
   private def lineageCut(df: DataFrame, dir: Option[String],
                          eager: Boolean): DataFrame = dir match {

@@ -45,6 +45,15 @@ object Analytics {
       .agg(count(lit(1)).as("n"))
   }
 
+  /** The simple undirected edge set (u, v) of `edges`: u = least and
+   * v = greatest endpoint, nulls and self-loops dropped, duplicate and
+   * reversed edges collapsed. */
+  private def undirected(edges: DataFrame, a: String, b: String): DataFrame =
+    edges
+      .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
+      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
+      .distinct()
+
   /**
    * PageRank over a weighted edge list by distributed power iteration —
    * the stationary-importance ranking of the [[transitions]] graph (and
@@ -71,7 +80,9 @@ object Analytics {
     require(iters >= 1 && damping > 0 && damping < 1,
       "pagerank needs iters >= 1 and damping in (0,1)")
     val w = weightCol.map(col(_).cast("double")).getOrElse(lit(1.0))
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
+    val e0 = graft.Fixpoint.input(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w")),
+      checkpointDir)
     // non-positive/null weights would make a source's normalizing sum 0
     // or negative — null/Inf wn then poisons EVERY rank via the join.
     // Such edges carry no mass by definition (weightedSample's w > 0
@@ -137,7 +148,9 @@ object Analytics {
     require(iters >= 1 && damping > 0 && damping < 1,
       "personalizedPagerank needs iters >= 1 and damping in (0,1)")
     val w = weightCol.map(col(_).cast("double")).getOrElse(lit(1.0))
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
+    val e0 = graft.Fixpoint.input(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w")),
+      checkpointDir)
     val eNorm = graft.CacheScope.persist(
       e0.filter(col("w") > 0)
         .withColumn("wn", col("w") / sum("w").over(Window.partitionBy("src")))
@@ -145,7 +158,8 @@ object Analytics {
         .repartition(col("src")))
     val nodes = graft.CacheScope.persist(
       e0.select(col("src").as("node")).union(e0.select(col("dst"))).distinct())
-    val seedSet = seeds.select(col(seedCol).as("node")).distinct()
+    val seedSet = graft.Fixpoint.input(
+      seeds.select(col(seedCol).as("node")).distinct(), checkpointDir)
     // teleport vector over GRAPH nodes only; 1/|S∩V| mass per live seed.
     // The no-live-seed refusal is IN-PLAN (the gini/modularity
     // raise_error discipline): n_seeds rides the 1-row broadcast the
@@ -237,14 +251,10 @@ object Analytics {
                      iters: Int = 10,
                      checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"lpaCommunities needs iters >= 1, got $iters")
-    val und = edges
-      .select(least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
-    val sym = graft.CacheScope.persist(
-      und.union(und.select(col("v").as("u"), col("u").as("v")))
-        .repartition(col("u")))
+    val und = undirected(edges, aCol, bCol)
+    val sym = graft.Fixpoint.input(
+      und.union(und.select(col("v").as("u"), col("u").as("v"))),
+      checkpointDir, col("u"))
     val nodes = graft.CacheScope.persist(
       sym.select(col("u").as("node")).distinct())
     val labels = graft.Fixpoint.iterate("lpaCommunities",
@@ -317,17 +327,14 @@ object Analytics {
                          moveRounds: Int = 4,
                          checkpointDir: Option[String] = None): DataFrame = {
     require(moveRounds >= 1, s"louvainCommunities needs moveRounds >= 1")
-    val und = edges
-      .select(least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
-    val sym1 = graft.CacheScope.persist(
+    val und = undirected(edges, aCol, bCol)
+    val sym1 = graft.Fixpoint.input(
       und.union(und.select(col("v").as("u"), col("u").as("v")))
-        .select(col("u"), col("v"), lit(1L).as("w"))
-        .repartition(col("u")))
-    val c1 = graft.CacheScope.persist(
-      louvainMoves(sym1, None, moveRounds, checkpointDir))
+        .select(col("u"), col("v"), lit(1L).as("w")),
+      checkpointDir, col("u"))
+    // phase 2 reads phase 1's answer as a loop input too
+    val c1 = graft.Fixpoint.input(
+      louvainMoves(sym1, None, moveRounds, checkpointDir), checkpointDir)
     // coarsen: communities become nodes; inter-community weight sums,
     // intra-community weight becomes self-loop weight (sym carries both
     // orientations, so the intra sum is exactly 2x the pair weight)
@@ -376,11 +383,7 @@ object Analytics {
                         membership: DataFrame, nodeCol: String,
                         commCol: String,
                         checkpointDir: Option[String] = None): DataFrame = {
-    val e = edges
-      .select(least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
+    val e = undirected(edges, aCol, bCol)
     val memb = membership.select(col(nodeCol).as("node"),
       col(commCol).as("comm")).distinct()
     val intra = e
@@ -440,11 +443,7 @@ object Analytics {
                         checkpointDir: Option[String] = None): DataFrame = {
     require(moveRounds >= 1 && maxLevels >= 1,
       "leidenCommunities needs moveRounds >= 1 and maxLevels >= 1")
-    val und = graft.CacheScope.persist(edges
-      .select(least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct())
+    val und = graft.Fixpoint.input(undirected(edges, aCol, bCol), checkpointDir)
     val sym0 = graft.CacheScope.persist(
       und.union(und.select(col("v").as("u"), col("u").as("v")))
         .select(col("u"), col("v"), lit(1L).as("w"))
@@ -651,10 +650,7 @@ object Analytics {
    * center, closing semi-join.
    */
   def triangles(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val und = edges
-      .select(least(col(aCol), col(bCol)).as("u"), greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
+    val und = undirected(edges, aCol, bCol)
     val deg = und.select(col("u").as("n")).union(und.select(col("v")))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val withDeg = und
@@ -1227,11 +1223,7 @@ object Analytics {
             maxIters: Int = 50,
             checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1, s"kCore needs k >= 1, got $k")
-    val und0 = graft.CacheScope.persist(edges
-      .select(least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct())
+    val und0 = graft.Fixpoint.input(undirected(edges, aCol, bCol), checkpointDir)
     val n0 = und0.count()
     // state: (live edges, their count, stable)
     val (und, _, _) = graft.Fixpoint.iterate("kCore", (und0, n0, n0 == 0L),
@@ -1766,11 +1758,7 @@ object Analytics {
    */
   def clusteringCoefficient(edges: DataFrame, aCol: String,
                             bCol: String): DataFrame = {
-    val und = edges
-      .select(least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
+    val und = undirected(edges, aCol, bCol)
     val deg = und.select(col("u").as("n")).union(und.select(col("v")))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val withDeg = und
@@ -1831,13 +1819,13 @@ object Analytics {
                             checkpointDir: Option[String] = None): DataFrame = {
     // normalize: undirected, self-loop-free, parallel edges → min weight
     // (deterministic under the same (w,u,v) order the rounds use)
-    val und = graft.CacheScope.persist(edges
+    val und = graft.Fixpoint.input(edges
       .select(least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"),
         col(wCol).cast("double").as("w"))
       .filter(col("u").isNotNull && col("v").isNotNull &&
         col("w").isNotNull && col("u") =!= col("v"))
-      .groupBy("u", "v").agg(min("w").as("w")))
+      .groupBy("u", "v").agg(min("w").as("w")), checkpointDir)
     val labels0 = graft.CacheScope.persist(
       und.select(col("u").as("node")).union(und.select(col("v")))
         .distinct().withColumn("comp", col("node")))
@@ -2102,11 +2090,11 @@ object Analytics {
                     maxIter: Int = 50,
                     checkpointDir: Option[String] = None): DataFrame = {
     require(sources.nonEmpty, "shortestPaths needs at least one source")
-    val und = edges
+    val und = graft.Fixpoint.input(edges
       .select(col(aCol).as("src"), col(bCol).as("dst"),
         col(wCol).cast("double").as("w"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("w").isNotNull && col("src") =!= col("dst"))
+        col("w").isNotNull && col("src") =!= col("dst")), checkpointDir)
     val negatives = und.filter(col("w") < 0).isEmpty
     require(negatives, "shortestPaths: negative edge weights refused")
     val sym = graft.CacheScope.persist(
@@ -2291,10 +2279,10 @@ object Analytics {
                   checkpointDir: Option[String] = None): DataFrame = {
     require(walksPerNode >= 1 && walkLen >= 1,
       "randomWalks needs walksPerNode >= 1 and walkLen >= 1")
-    val und = edges
+    val und = graft.Fixpoint.input(edges
       .select(col(aCol).as("src"), col(bCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
+        col("src") =!= col("dst")), checkpointDir)
     val sym = graft.CacheScope.persist(
       und.union(und.select(col("dst"), col("src"))).distinct()
         .repartition(col("src")))
@@ -2344,17 +2332,15 @@ object Analytics {
               seeds: DataFrame, seedCol: String, maxHops: Int,
               checkpointDir: Option[String] = None): DataFrame = {
     require(maxHops >= 0, "bfsHops needs maxHops >= 0")
-    val e = graft.CacheScope.persist(
+    val e = graft.Fixpoint.input(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .filter(col("src").isNotNull && col("dst").isNotNull &&
           col("src") =!= col("dst"))
-        .distinct()
-        .repartition(col("src")))
-    // state: (visited, frontier). The seed ring is cut up front (the
-    // seeds frame is the caller's plan); the per-ring emptiness probe is
-    // a driver action over the (node-sized) frontier — bounded by
-    // maxHops, never the corpus — and is each ring's one action
-    val visited0 = graft.Fixpoint.entryCut(
+        .distinct(), checkpointDir, col("src"))
+    // state: (visited, frontier); the per-ring emptiness probe is a
+    // driver action over the (node-sized) frontier — bounded by maxHops,
+    // never the corpus — and is each ring's one action
+    val visited0 = graft.Fixpoint.input(
       seeds.select(col(seedCol).as("node")).distinct().withColumn("hops", lit(0)),
       checkpointDir)
     graft.Fixpoint.iterate("bfsHops", (visited0, visited0.select("node")),
@@ -2385,11 +2371,7 @@ object Analytics {
   def modularity(edges: DataFrame, aCol: String, bCol: String,
                  membership: DataFrame, nodeCol: String,
                  commCol: String): DataFrame = {
-    val e = edges.select(
-        least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .distinct()
+    val e = undirected(edges, aCol, bCol)
     val memb = membership.select(col(nodeCol).as("node"),
       col(commCol).as("comm")).distinct()
     val deg = e.select(col("u").as("node"))
@@ -2570,14 +2552,13 @@ object Analytics {
                    maxHops: Int,
                    checkpointDir: Option[String] = None): DataFrame = {
     require(maxHops >= 0, "landmarkHops needs maxHops >= 0")
-    val e = graft.CacheScope.persist(
+    val e = graft.Fixpoint.input(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .filter(col("src").isNotNull && col("dst").isNotNull &&
           col("src") =!= col("dst"))
-        .distinct()
-        .repartition(col("src")))
+        .distinct(), checkpointDir, col("src"))
     // state: (visited, frontier) — the bfsHops loop
-    val visited0 = graft.Fixpoint.entryCut(
+    val visited0 = graft.Fixpoint.input(
       seeds.select(col(originCol).as("origin"), col(nodeCol).as("node"))
         .distinct().withColumn("hops", lit(0)), checkpointDir)
     graft.Fixpoint.iterate("landmarkHops", (visited0, visited0.select("origin", "node")),

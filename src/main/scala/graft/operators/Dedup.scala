@@ -505,19 +505,18 @@ object Dedup {
    * label in its closed neighborhood; converges in O(component diameter)
    * rounds. Near-dup components are dense and shallow (diameter ≤ ~3),
    * so the loop is short; each round is one shuffle join + aggregation,
-   * and `localCheckpoint` caps lineage growth so round N doesn't replay
-   * rounds 1..N-1. Only nodes that appear in some pair are emitted.
+   * and each round's lineage cut ([[graft.Fixpoint]], reliable under
+   * `checkpointDir`) keeps round N from replaying rounds 1..N-1. Only
+   * nodes that appear in some pair are emitted.
    * Labels not converged after `maxIter` rounds are an error, never a
    * partial answer.
    */
   def clusterPairs(pairs: DataFrame, aCol: String, bCol: String,
                    maxIter: Int = 20,
                    checkpointDir: Option[String] = None): DataFrame = {
-    // the pair source enters through the entry cut (see Fixpoint's ENTRY
-    // CUT): the symmetric union below reads it twice, and `pairs` is
-    // typically an expensive similarity join whose cached plan would
-    // otherwise be re-printed by AQE at every stage of every round
-    val p = graft.Fixpoint.entryCut(
+    // the pair source is cut below the symmetric union, which reads it
+    // twice: `pairs` is typically an expensive similarity join
+    val p = graft.Fixpoint.input(
       pairs.select(col(aCol).as("src"), col(bCol).as("dst")), checkpointDir)
     // symmetric edges, pre-partitioned by src and cached over the cut:
     // every round's propagation join reuses this partitioning — the

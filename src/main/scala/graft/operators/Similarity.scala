@@ -413,8 +413,9 @@ object Similarity {
                       k: Int, iters: Int,
                       checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1 && iters >= 0, "kmeansCentroids needs k >= 1, iters >= 0")
-    val base = graft.CacheScope.persist(
-      em.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v")))
+    val base = graft.Fixpoint.input(
+      em.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v")),
+      checkpointDir)
     val init = base
       .withColumn("h", md5(col("id").cast("string")))
       .orderBy("h").limit(k)
@@ -443,8 +444,9 @@ object Similarity {
                             checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1 && iters >= 0,
       "kmeansCentroidsFitted needs k >= 1, iters >= 0")
-    val base = graft.CacheScope.persist(
-      em.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v")))
+    val base = graft.Fixpoint.input(
+      em.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v")),
+      checkpointDir)
     val picks = kmeansParallelInit(em, idCol, vecCol, k,
       oversample = oversample, rounds = initRounds, buckets = buckets)
     val init = picks
@@ -1116,7 +1118,7 @@ object Similarity {
                   checkpointDir: Option[String] = None): DataFrame = {
     require(m >= 1 && dim % m == 0, s"pqCodebooks: dim $dim not divisible by m $m")
     require(ks >= 1 && iters >= 0, "pqCodebooks needs ks >= 1, iters >= 0")
-    val sv = graft.CacheScope.persist(subspaced(em, idCol, vecCol, m, dim))
+    val sv = graft.Fixpoint.input(subspaced(em, idCol, vecCol, m, dim), checkpointDir)
     pqTrain(sv, ks, iters, checkpointDir)
       .select(col("sub"), col("cell"), posexplode(col("c")).as(Seq("dim", "mean")))
       .select(col("sub"), col("cell"), (col("dim") + 1).as("dim"), col("mean"))
@@ -1211,7 +1213,8 @@ object Similarity {
       Array.tabulate(dim)(j => if (i == j) 1.0 else 0.0))
     for (_ <- 1 to opqRounds) {
       val rotated = rotate(sample, "v", r, dim)
-      val sv = graft.CacheScope.persist(subspaced(rotated, "id", "v", m, dim))
+      val sv = graft.Fixpoint.input(subspaced(rotated, "id", "v", m, dim),
+        checkpointDir)
       val cent = pqTrain(sv, ks, iters, checkpointDir)
       // reconstruct x̂ (full-dim, subspace slices in order) per sample id
       val recon = pqAssign(sv, cent)
@@ -1340,8 +1343,9 @@ object Similarity {
     }
   }
 
-  /** Lloyd loop over a (PERSISTED) subspaced frame; returns the array-form
-   * centroid frame (sub, cell, c, c2). */
+  /** Lloyd loop over a subspaced frame that entered through
+   * [[graft.Fixpoint.input]]; returns the array-form centroid frame
+   * (sub, cell, c, c2). */
   private def pqTrain(sv: DataFrame, ks: Int, iters: Int,
                       checkpointDir: Option[String]): DataFrame = {
     val picked = sv.filter(col("sub") === 0).select(col("id"))
@@ -1470,13 +1474,13 @@ object Similarity {
     // residual r = v − c_cell, subspaced; the zip_with subtraction is
     // interpreted but runs ONCE per vector at build time, never at query
     // time. nrm stays the EXACT full-vector norm (ADC needs it).
-    val sv = graft.CacheScope.persist(assigned
+    val sv = graft.Fixpoint.input(assigned
       .join(broadcast(cent.select(col("cell").as("ivf_cell"), col("c_vec"))), "ivf_cell")
       .withColumn("r", zip_with(col("v_c"), col("c_vec"), (x, y) => x - y))
       .select(col("cand_id").as("id"), col("ivf_cell"), col("nrm_c").as("nrm"), col("r"))
       .withColumn("sub", explode(sequence(lit(0), lit(m - 1))))
       .select(col("id"), col("ivf_cell"), col("nrm"), col("sub"),
-        slice(col("r"), col("sub") * dsub + 1, lit(dsub)).as("vs")))
+        slice(col("r"), col("sub") * dsub + 1, lit(dsub)).as("vs")), checkpointDir)
     // ONE shared residual codebook set across cells (standard IVFADC);
     // trained in pqTrain's joint subspace passes
     val pqcent = graft.CacheScope.persist(
@@ -1574,7 +1578,8 @@ object Similarity {
     // ONE subspaced pass over the raw vectors serves both training and
     // encoding; the centroid table feeds the encode join AND every
     // query LUT — persist or the Lloyd loop replays per consumer
-    val sv = graft.CacheScope.persist(subspaced(candidates, idCol, vecCol, m, dim))
+    val sv = graft.Fixpoint.input(subspaced(candidates, idCol, vecCol, m, dim),
+      checkpointDir)
     val cent = graft.CacheScope.persist(pqTrain(sv, ks, iters, checkpointDir))
     val codes = graft.CacheScope.persist(pqAssign(sv, cent)
       .select(col("id").as("cand_id"), col("sub"), col("cell").as("code"),
@@ -2078,10 +2083,10 @@ object Similarity {
     require(hops >= 1, s"featurePropagate needs hops >= 1, got $hops")
     require(selfWeight >= 0 && selfWeight <= 1,
       s"selfWeight in [0,1], got $selfWeight")
-    val und = edges
+    val und = graft.Fixpoint.input(edges
       .select(col(aCol).as("_a"), col(bCol).as("_b"))
       .filter(col("_a").isNotNull && col("_b").isNotNull &&
-        col("_a") =!= col("_b"))
+        col("_a") =!= col("_b")), checkpointDir)
     val sym = graft.CacheScope.persist(
       und.union(und.select(col("_b").as("_a"), col("_a").as("_b")))
         .distinct().repartition(col("_a")))

@@ -412,14 +412,14 @@ object Trajectory {
     val w = Window.partitionBy(kc: _*)
     val o = col(orderCol)
     // init: one segment per trajectory, spanning first..last point
-    val pts0 = graft.CacheScope.persist(df
+    val pts0 = graft.Fixpoint.input(df
       .withColumn("_so", min(o).over(w))
       .withColumn("_eo", max(o).over(w))
       .withColumn("_sx", min(struct(o, col(xCol))).over(w).getField(xCol))
       .withColumn("_sy", min(struct(o, col(yCol))).over(w).getField(yCol))
       .withColumn("_ex", max(struct(o, col(xCol))).over(w).getField(xCol))
       .withColumn("_ey", max(struct(o, col(yCol))).over(w).getField(yCol))
-      .withColumn("_kept", o === col("_so") || o === col("_eo")))
+      .withColumn("_kept", o === col("_so") || o === col("_eo")), checkpointDir)
     // per segment: the max-deviation interior point over epsilon (ties →
     // lowest order) — the split decisions; none left means done
     def splitsOf(pts: DataFrame): DataFrame = {

@@ -1,31 +1,16 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.GraftListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
-import graft.operators.{Analytics, Dedup}
+import graft.operators.{Analytics, Dedup, Similarity}
 
 /** The [[Fixpoint]] contract: what each exhaustion policy does at its
- * bound, what the lazy cut costs while a loop is built, and what the
- * entry cut keeps out of the plans AQE re-prints every round. */
+ * bound, what the lazy cut costs while a loop is built, and what
+ * [[Fixpoint.input]] keeps out of the plans AQE re-prints every round. */
 class FixpointSpec extends SparkSpecBase {
   import SparkTestSession.spark.implicits._
-
-  /** Run `body` with `l` attached; every event it posted is delivered
-   * before this returns. */
-  private def listening[T](l: SparkListener)(body: => T): T = {
-    val sc = spark.sparkContext
-    GraftListenerBridge.drainListenerBus(sc)
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      GraftListenerBridge.drainListenerBus(sc)
-      out
-    } finally sc.removeSparkListener(l)
-  }
 
   /** Spark jobs submitted while `body` runs, and its result. */
   private def countJobs[T](body: => T): (Int, T) = {
@@ -34,22 +19,6 @@ class FixpointSpec extends SparkSpecBase {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     })(body)
     (jobs.get.toInt, out)
-  }
-
-  /** Characters of physical plan description posted while `body` runs:
-   * each SQL execution's start plus every AQE re-plan update. */
-  private def planChars[T](body: => T): (Long, T) = {
-    val chars = new AtomicLong()
-    val out = listening(new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          chars.addAndGet(s.physicalPlanDescription.length)
-        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
-          chars.addAndGet(u.physicalPlanDescription.length)
-        case _ => ()
-      }
-    })(body)
-    (chars.get, out)
   }
 
   /** 20 disjoint triangles over ids 0..59 as `(id_a, id_b)` pairs. */
@@ -66,27 +35,77 @@ class FixpointSpec extends SparkSpecBase {
   private def labelsOf(df: DataFrame): Map[Long, Long] =
     df.as[(Long, Long)].collect().toMap
 
-  test("clusterPairs' rounds do not re-print the input's nested cached plans") {
-    CacheScope.scoped {
-      // three nested persisted frames, each reading the one below twice
-      // (a self-join that keeps the 60 pairs) — the shape of a
-      // similarity join's cached pair source
-      val input = (1 to 3).foldLeft(triangles) { (f, _) =>
-        CacheScope.persist(f.join(f, Seq("id_a", "id_b")))
+  /** `triangles` with a weight column, behind `depth` nested persisted
+   * frames, each reading the one below twice (a self-join that keeps the
+   * 60 pairs) — the shape of a similarity join's cached pair source. */
+  private def nestedInput(depth: Int): DataFrame =
+    (1 to depth).foldLeft(
+      triangles.withColumn("w", ((col("id_a") + col("id_b")) % 7 + 1).cast("double"))) {
+      (f, _) => CacheScope.persist(f.join(f, Seq("id_a", "id_b", "w")))
+    }
+
+  /** The directed chain 0 → 1 → … → 60 over the triangles' ids, read
+   * from the edge frame itself: the BFS loops then run a ring per hop
+   * instead of stopping at each triangle's second ring. */
+  private def chain(e: DataFrame): DataFrame =
+    e.select(col("id_a"), (col("id_a") + 1).as("id_b"))
+      .union(e.select(col("id_b").as("id_a"), (col("id_b") + 1).as("id_b")))
+
+  /** Every graph loop, on an `(id_a, id_b, w)` edge frame, with the round
+   * counts cut down to keep the fast gate fast. */
+  private val graphLoops: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "pagerank" -> (e => Analytics.pagerank(e, "id_a", "id_b", Some("w"), iters = 3)),
+    "personalizedPagerank" -> (e => Analytics.personalizedPagerank(e, "id_a", "id_b",
+      Seq(0L, 4L).toDF("s"), "s", Some("w"), iters = 3)),
+    "lpaCommunities" -> (e => Analytics.lpaCommunities(e, "id_a", "id_b", iters = 3)),
+    "louvainCommunities" -> (e =>
+      Analytics.louvainCommunities(e, "id_a", "id_b", moveRounds = 1)),
+    "leidenCommunities" -> (e =>
+      Analytics.leidenCommunities(e, "id_a", "id_b", moveRounds = 1, maxLevels = 2)),
+    "kCore" -> (e => Analytics.kCore(e, "id_a", "id_b", k = 2)),
+    "minimumSpanningForest" -> (e =>
+      Analytics.minimumSpanningForest(e, "id_a", "id_b", "w")),
+    "shortestPaths" -> (e =>
+      Analytics.shortestPaths(e, "id_a", "id_b", "w", Seq(0L, 3L))),
+    "randomWalks" -> (e => Analytics.randomWalks(e, "id_a", "id_b", walkLen = 3)),
+    "bfsHops" -> (e => Analytics.bfsHops(chain(e), "id_a", "id_b",
+      Seq(0L, 30L).toDF("s"), "s", maxHops = 8)),
+    "landmarkHops" -> (e => Analytics.landmarkHops(chain(e), "id_a", "id_b",
+      Seq((0L, 0L), (1L, 30L)).toDF("o", "n"), "o", "n", maxHops = 8)),
+    "featurePropagate" -> (e => Similarity.featurePropagate(e, "id_a", "id_b",
+      spark.range(60).select(col("id"), array(col("id").cast("double"), lit(1.0))
+        .as("v")), "id", "v")),
+    "clusterPairs" -> (e => Dedup.clusterPairs(e, "id_a", "id_b")))
+
+  /** A frame's rows as sorted strings, doubles to 9 places: the sums'
+   * order (and so their last bits) follows the input's partitioning. */
+  private def answerOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case d: Double => f"$d%.9f"
+      case x => String.valueOf(x)
+    }.mkString(",")).sorted.toSeq
+
+  for ((name, loop) <- graphLoops) {
+    val owner = if (name.endsWith("s")) s"$name'" else s"$name's"
+    test(s"$owner rounds do not re-print the input's nested cached plans") {
+      // plan chars of one count of the input, of the loop; the answer
+      def run(depth: Int): (Long, Long, Seq[String]) = CacheScope.scoped {
+        val input = nestedInput(depth)
+        val (countChars, n) = planChars(input.count())
+        assert(n === 60L)
+        val (loopChars, answer) = planChars(answerOf(loop(input)))
+        (countChars, loopChars, answer)
       }
-      val (inputChars, n) = planChars(input.count())
-      assert(n === 60L)
-      val (loopChars, labels) = planChars {
-        val l = Dedup.clusterPairs(input, "id_a", "id_b")
-        assert(l.count() === 60L)
-        l
-      }
-      assert(labelsOf(labels) === triangleLabels)
-      val ratio = loopChars.toDouble / inputChars
-      // the edge table enters the loop as a cut leaf, so AQE's per-stage
-      // plan updates do not carry the three cached levels every round
-      assert(ratio <= 10.0,
-        s"clusterPairs posted $ratio× the plan text of one count of its input")
+      val (count0, loop0, answer0) = run(0)
+      val (count3, loop3, answer3) = run(3)
+      assert(answer3 === answer0)
+      // a loop input enters as a cut leaf, so AQE's per-stage plan updates
+      // do not carry the three cached levels every round: the loop posts
+      // the nested plans a few times, not once per stage of every round
+      val reprints = (loop3 - loop0).toDouble / (count3 - count0)
+      info(f"$name: $reprints%.2f re-prints ($loop0 → $loop3 chars)")
+      assert(reprints <= 10.0,
+        f"$name re-printed its input's nested plans $reprints%.1f times")
     }
   }
 

@@ -223,7 +223,9 @@ class Round6Spec extends SparkSpecBase {
     }
     val (local, localRanks) = run(None)
     val (reliable, reliableRanks) = run(Some(dir))
-    assert(reliable - local === iters, "each round's frame is cached once")
+    // one more reliable persist than rounds: the edge frame enters the
+    // loop through the same lazy reliable cut (Fixpoint.input)
+    assert(reliable - local === iters + 1, "each round's frame is cached once")
     assert(reliableRanks === localRanks)
   }
 
