@@ -1,35 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Driver-run benchmark: every SparkEntry query timed on SPARK_GRAFT_SF_DIR,
-  * one JSON line to stdout. */
+  * one JSON line to stdout, per-query detail (seconds, CPU, shuffle,
+  * spill, jobs, stages, tasks) to SPARK_GRAFT_BENCH_OUT.
+  * `SPARK_GRAFT_ONLY=<q>` times one query the same way. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // optional comma-separated query subset (scale-tier probes of the
-    // shuffle leaders); empty = the full workload, the driver's mode
-    val only: Set[String] = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-    require(only.forall(SparkEntry.queries.contains),
-      s"SPARK_GRAFT_ONLY names unknown queries: " +
-        (only -- SparkEntry.queries.keySet).mkString(","))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // 52 queries × several codegen stages each exceed the default
-      // 100-entry generated-class cache; sized to hold the whole workload
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LogQuiet.windowExec()
+    // shuffle leaders, one query's counts); empty = the full workload
+    val only = Harness.queryNames("SPARK_GRAFT_ONLY", sys.env.get("SPARK_GRAFT_ONLY")
+      .toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)).toSet
+    val spark = Harness.driverSession()
 
     // Warm up JIT/codegen/parquet-footer paths untimed: one full pass of
     // every query at the smallest scale factor. The plans are structurally
@@ -49,7 +33,6 @@ object Bench {
         "(set SPARK_GRAFT_WARM_DIR); refusing to time cold plans as warm")
     // NonFatal only: an OOM or interrupt during warmup must abort the
     // bench, not be swallowed and mis-measured
-    import scala.util.control.NonFatal
     SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
       .sortBy(_._1).foreach { case (name, fn) =>
@@ -64,54 +47,31 @@ object Bench {
     // a warm cache keyed to a different input dir
     SharedStage.clear()
 
-    // per-query shuffle-write + spill bytes from task metrics: PlanSpec
-    // locks plan SHAPE, these catch VOLUME regressions (a join that
-    // silently started shuffling 10x, a window that began spilling) as
-    // round-over-round diffable numbers. executorCpuTime (ns→ms) rides the
-    // same listener: on a loaded shared machine wall-clock inflates with
-    // scheduler queueing while task CPU stays flat, so cpu_ms is the
-    // primary cross-round signal and wall is advisory.
-    val shuffleAcc = new java.util.concurrent.atomic.AtomicLong
-    val spillAcc = new java.util.concurrent.atomic.AtomicLong
-    val cpuAcc = new java.util.concurrent.atomic.AtomicLong
-    val metricsListener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          shuffleAcc.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          spillAcc.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-          cpuAcc.addAndGet(m.executorCpuTime)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(metricsListener)
-    def drained[T](body: => T): (T, Long, Long, Long) = {
-      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-      val (s0, p0, c0) = (shuffleAcc.get, spillAcc.get, cpuAcc.get)
-      val r = body
-      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-      (r, shuffleAcc.get - s0, spillAcc.get - p0,
-        (cpuAcc.get - c0) / 1000000L) // ns → ms
-    }
-
+    // Each entry is billed with the counters of [[Harness.measure]]:
+    // PlanSpec locks plan SHAPE, shuffle-write and spill bytes catch
+    // VOLUME regressions (a join that silently started shuffling 10x, a
+    // window that began spilling) as round-over-round diffable numbers.
+    // On a loaded shared machine wall-clock inflates with scheduler
+    // queueing while task CPU stays flat, so cpu_ms is the primary
+    // cross-round signal and wall is advisory. Jobs, stages and tasks say
+    // whether a change removed scheduling work: a query whose wall exceeds
+    // its cpu at every core count is stage-latency bound.
+    final case class Entry(name: String, sec: Double, c: Harness.Counters)
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     // median of 3 timed passes per query: single-pass timings on a shared
     // machine wobbled by ±0.5 s round-over-round on sub-second queries
     // with unchanged plans; the median is robust to one noisy pass
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      s(s.length / 2)
-    }
-    // deterministic execution order: rounds compare like-for-like and the
-    // first-query session-warmup penalty always lands on the same query
-    // per-rep shuffle/spill deltas are medianed like the timings: the
+    def median[N: Ordering](xs: Seq[N]): N = xs.sorted.apply(xs.length / 2)
+    // per-rep counters are medianed field by field like the timings: the
     // last rep alone could absorb a concurrent job's tasks (the listener
     // is session-global) and misreport the query's own volume
-    def medianL(xs: Seq[Long]): Long = {
-      val s = xs.sorted
-      s(s.length / 2)
-    }
+    def medianCounters(cs: Seq[Harness.Counters]): Harness.Counters =
+      if (cs.isEmpty) Harness.Counters(0, 0, 0, 0, 0, 0, 0, 0)
+      else Harness.Counters(median(cs.map(_.jobs)), median(cs.map(_.stages)),
+        median(cs.map(_.tasks)), median(cs.map(_.cpuNanos)),
+        median(cs.map(_.shuffleWriteBytes)), median(cs.map(_.spillBytes)),
+        median(cs.map(_.inputBytes)), median(cs.map(_.planChars)))
     // The SharedStage materializations (near-dup pair join + CC labels,
     // and the BM25 postings index) are measured ONCE as their own entry:
     // the per-query medians below are amortized steady-state costs —
@@ -139,7 +99,7 @@ object Bench {
     // must not hide the other families' numbers).
     val buildStages = scala.collection.mutable.ArrayBuffer[(String, Double, Boolean)]()
     val buildT0 = System.nanoTime()
-    val (_, buildSh, buildSp, buildCpu) = drained {
+    val (_, buildC) = Harness.measure(spark) {
       CacheScope.scoped {
         for (q <- buildQs) {
           val t0 = System.nanoTime()
@@ -154,25 +114,25 @@ object Bench {
         }
       }
     }
-    val buildEntry = ("_shared_stage_build",
-      (System.nanoTime() - buildT0) / 1e9, buildSh, buildSp, buildCpu)
+    val buildEntry = Entry("_shared_stage_build",
+      (System.nanoTime() - buildT0) / 1e9, buildC)
     // a subset run that excludes every build query must NOT emit the
     // build row: its near-zero value would poison any best-of cpu
     // history it is (mistakenly) fed into, flagging every future full
     // run's real build as a regression
     val buildEntries = if (buildQs.nonEmpty) Seq(buildEntry) else Seq.empty
+    // deterministic execution order: rounds compare like-for-like and the
+    // first-query session-warmup penalty always lands on the same query
     val results = buildEntries ++ SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
       .sortBy(_._1).map { case (name, fn) =>
       val times = scala.collection.mutable.ArrayBuffer[Double]()
-      val shuffles = scala.collection.mutable.ArrayBuffer[Long]()
-      val spills = scala.collection.mutable.ArrayBuffer[Long]()
-      val cpus_ = scala.collection.mutable.ArrayBuffer[Long]()
+      val counters = scala.collection.mutable.ArrayBuffer[Harness.Counters]()
       var firstFailure = 0.0
       (1 to reps).foreach { _ =>
         if (firstFailure == 0.0) {
           val t0 = System.nanoTime()
-          val (ok, sh, sp, cpu) = drained {
+          val (ok, c) = Harness.measure(spark) {
             CacheScope.scoped {
               try { fn(spark, sfDir).count(); true } catch { case NonFatal(e) =>
                 System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -184,32 +144,22 @@ object Bench {
           val dt = (System.nanoTime() - t0) / 1e9
           // failures are marked with negative elapsed so they can never be
           // mistaken for a fast success downstream
-          if (ok) { times += dt; shuffles += sh; spills += sp; cpus_ += cpu }
+          if (ok) { times += dt; counters += c }
           else firstFailure = -dt
         }
       }
-      (name, if (firstFailure != 0.0) firstFailure else median(times.toSeq),
-        if (shuffles.isEmpty) 0L else medianL(shuffles.toSeq),
-        if (spills.isEmpty) 0L else medianL(spills.toSeq),
-        if (cpus_.isEmpty) 0L else medianL(cpus_.toSeq))
+      Entry(name, if (firstFailure != 0.0) firstFailure else median(times.toSeq),
+        medianCounters(counters.toSeq))
     }
-    // the bench's accounting must not leak into later session activity
-    spark.sparkContext.removeSparkListener(metricsListener)
-    val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val shuffles = results.map { case (k, _, s, _, _) => s"\"" + k + "\":" + s }
-      .mkString("{", ",", "}")
-    val spills = results.map { case (k, _, _, p, _) => s"\"" + k + "\":" + p }
-      .mkString("{", ",", "}")
-    val cpuMs = results.map { case (k, _, _, _, c) => s"\"" + k + "\":" + c }
-      .mkString("{", ",", "}")
+    def perEntry(f: Entry => Any): String =
+      results.map(e => s"\"${e.name}\":${f(e)}").mkString("{", ",", "}")
     // totals and counts bill QUERIES only: the one-time _shared_stage_build
     // row stays in the per-entry maps (it is real pipeline cost) but is
     // reported as its own build_* fields so round-over-round total/count
     // diffs compare query work against query work
-    val queryResults = results.filterNot(_._1 == "_shared_stage_build")
-    val total = if (queryResults.nonEmpty) queryResults.map(_._2).sum else 0.0
-    val totalCpuSec = queryResults.map(_._5).sum / 1e3
+    val queryResults = results.filterNot(_.name == "_shared_stage_build")
+    val total = queryResults.map(_.sec).sum
+    val totalCpuSec = queryResults.map(_.c.cpuMs).sum / 1e3
     // minimal JSON string escaping for names/paths we embed verbatim
     def jstr(s: String): String =
       "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
@@ -224,8 +174,8 @@ object Bench {
     // buildEntry, so tooling reading build_* directly can't mistake a
     // build-free artifact for a free build
     val (buildSec, buildShB, buildCpuMs) =
-      if (buildQs.nonEmpty)
-        (buildEntry._2.toString, buildEntry._3.toString, buildEntry._5.toString)
+      if (buildQs.nonEmpty) (buildEntry.sec.toString,
+        buildC.shuffleWriteBytes.toString, buildC.cpuMs.toString)
       else ("null", "null", "null")
     // per-stage build rows (name → seconds, ok) and the build-inclusive
     // total: the r15 round moved real cost INTO the excluded build row,
@@ -235,14 +185,17 @@ object Bench {
       .map { case (q, s, ok) => s"""${jstr(q)}:{"sec":$s,"ok":$ok}""" }
       .mkString("{", ",", "}")
     val totalWithBuild =
-      if (buildQs.nonEmpty) total + buildEntry._2 else total
+      if (buildQs.nonEmpty) total + buildEntry.sec else total
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec",$onlyJson"queries":$qs,""" +
+      s"""{"metric":"total","value":$total,"unit":"sec",$onlyJson"queries":${perEntry(_.sec)},""" +
         s""""n_queries":${queryResults.size},"n_entries":${results.size},""" +
         s""""build_sec":$buildSec,"build_shuffle_bytes":$buildShB,""" +
         s""""build_cpu_ms":$buildCpuMs,"build_stages":$buildStagesJson,""" +
         s""""total_with_build":$totalWithBuild,"cpu_sec":$totalCpuSec,""" +
-        s""""shuffle_bytes":$shuffles,"spill_bytes":$spills,"cpu_ms":$cpuMs,""" +
+        s""""shuffle_bytes":${perEntry(_.c.shuffleWriteBytes)},""" +
+        s""""spill_bytes":${perEntry(_.c.spillBytes)},"cpu_ms":${perEntry(_.c.cpuMs)},""" +
+        s""""jobs":${perEntry(_.c.jobs)},"stages":${perEntry(_.c.stages)},""" +
+        s""""tasks":${perEntry(_.c.tasks)},""" +
         s""""failed":$failedJson,"sf":${jstr(sfDir)}}"""
     // Full per-query detail lands in a file; stdout gets a COMPACT line.
     // The harness that collects BENCH_r{N}.json keeps only the last ~2000
@@ -254,7 +207,7 @@ object Bench {
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (json + "\n").getBytes("UTF-8"))
-    } catch { case scala.util.control.NonFatal(e) =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
     // headline queries: the heaviest / most representative of each family
@@ -277,12 +230,12 @@ object Bench {
     // JSON parse downstream
     def r3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val byName = results.map(r => r._1 -> r).toMap
-    val headQs = headline.flatMap(k => byName.get(k))
-      .map { case (k, v, _, _, _) => s"\"" + k + "\":" + r3(v) }
+    val byName = results.map(e => e.name -> e).toMap
+    val headQs = headline.flatMap(byName.get)
+      .map(e => s"\"${e.name}\":${r3(e.sec)}")
       .mkString("{", ",", "}")
-    val shuffleMb = queryResults.map(_._3).sum / 1e6
-    val spillMb = queryResults.map(_._4).sum / 1e6
+    val shuffleMb = queryResults.map(_.c.shuffleWriteBytes).sum / 1e6
+    val spillMb = queryResults.map(_.c.spillBytes).sum / 1e6
     // cap the failed list on the compact line: it must stay inside the
     // harness's ~2000-char stdout tail even when dozens of queries fail —
     // exactly the rounds where the signal matters most. Full list is in
@@ -292,7 +245,7 @@ object Bench {
       s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
         s""""cpu_sec":${r3(totalCpuSec)},""" +
         s""""sf":${jstr(sfDir)},"n_queries":${queryResults.size},""" +
-        s""""n_entries":${results.size},"build_sec":${r3(buildEntry._2)},""" +
+        s""""n_entries":${results.size},"build_sec":${r3(buildEntry.sec)},""" +
         s""""total_with_build":${r3(totalWithBuild)},""" +
         s""""shuffle_mb":${r3(shuffleMb)},"spill_mb":${r3(spillMb)},""" +
         s""""failed_count":${failed.size},"failed":$failedCompact,""" +

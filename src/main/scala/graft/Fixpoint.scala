@@ -84,7 +84,7 @@ object Fixpoint {
 
   /** `GRAFT_LOOP_DEBUG` set: each loop prints one line (name, rounds,
    * converged) to stderr. */
-  private[graft] val debug: Boolean = sys.env.contains("GRAFT_LOOP_DEBUG")
+  private val debug: Boolean = sys.env.contains("GRAFT_LOOP_DEBUG")
 
   /**
    * Run `step` from `init` under `policy`. A step gets the state, the

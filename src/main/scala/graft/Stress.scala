@@ -2,7 +2,6 @@ package graft
 
 import graft.operators._
 import graft.sources.LakeWriter
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -19,16 +18,7 @@ import org.apache.spark.sql.functions._
 object Stress {
   def main(args: Array[String]): Unit = {
     val scale = sys.env.getOrElse("SPARK_GRAFT_STRESS_SCALE", "1").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LogQuiet.windowExec()
+    val spark = Harness.driverSession()
     import spark.implicits._
 
     // SPARK_GRAFT_STRESS_ONLY=<substring> runs just the matching probes

@@ -256,7 +256,7 @@ object Quality {
         sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("cb"))
     // the single-task cumulative pass IS the CDF's plan — its size is
     // enforced by the cardinality gate above, so WindowExec's empty-spec
-    // warning is benign here (driver mains quiet that logger, LogQuiet)
+    // warning is benign here (driver mains quiet that logger, Harness.driverSession)
     val w = org.apache.spark.sql.expressions.Window.orderBy("v")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)

@@ -119,7 +119,7 @@ object Sampling {
     val cum = b.groupBy("_bk")
       .agg(sum(col(weightCol)).as("_bw"), count(lit(1)).as("_bn"))
       // strictly-higher buckets' mass: ≤ nBuckets rows, benign bounded
-      // single-partition window (see LogQuiet)
+      // single-partition window (see Harness.driverSession)
       .withColumn("_above", coalesce(sum(col("_bw")).over(
         W.orderBy(col("_bk").desc).rowsBetween(W.unboundedPreceding, -1)),
         lit(0L)))

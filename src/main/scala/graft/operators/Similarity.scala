@@ -41,7 +41,7 @@ object Similarity {
    * single-partition window WindowExec warns about is exactly the
    * intended ≤k-row plan — a constant partition key can't silence it
    * (Spark 4 folds literal partition specs away). Driver mains quiet
-   * the WindowExec logger instead ([[graft.LogQuiet]]); specs keep the
+   * the WindowExec logger instead ([[graft.Harness.driverSession]]); specs keep the
    * warning visible so a NEW unbounded window still surfaces. */
   private def hRank: Column =
     row_number().over(Window.orderBy("h"))

@@ -1180,7 +1180,7 @@ object Text {
       .groupBy("tok").agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("tok").asc).limit(topN)
     // rank over ≤topN rows: the benign bounded single-partition window
-    // (see LogQuiet); the ln/ln OLS IS Analytics.linearFit (ungrouped) —
+    // (see Harness.driverSession); the ln/ln OLS IS Analytics.linearFit (ungrouped) —
     // one divide-by-zero-safe slope implementation, not two
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("c").desc, col("tok").asc)

@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Analytics, Dedup, Similarity}
@@ -11,15 +9,6 @@ import graft.operators.{Analytics, Dedup, Similarity}
  * [[Fixpoint.input]] keeps out of the plans AQE re-prints every round. */
 class FixpointSpec extends SparkSpecBase {
   import SparkTestSession.spark.implicits._
-
-  /** Spark jobs submitted while `body` runs, and its result. */
-  private def countJobs[T](body: => T): (Int, T) = {
-    val jobs = new AtomicLong()
-    val out = listening(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    })(body)
-    (jobs.get.toInt, out)
-  }
 
   /** 20 disjoint triangles over ids 0..59 as `(id_a, id_b)` pairs. */
   private def triangles: DataFrame =
@@ -91,10 +80,10 @@ class FixpointSpec extends SparkSpecBase {
       // plan chars of one count of the input, of the loop; the answer
       def run(depth: Int): (Long, Long, Seq[String]) = CacheScope.scoped {
         val input = nestedInput(depth)
-        val (countChars, n) = planChars(input.count())
+        val (n, counted) = measure(input.count())
         assert(n === 60L)
-        val (loopChars, answer) = planChars(answerOf(loop(input)))
-        (countChars, loopChars, answer)
+        val (answer, looped) = measure(answerOf(loop(input)))
+        (counted.planChars, looped.planChars, answer)
       }
       val (count0, loop0, answer0) = run(0)
       val (count3, loop3, answer3) = run(3)
@@ -129,19 +118,19 @@ class FixpointSpec extends SparkSpecBase {
   test("Fixed(n) runs n rounds; building the lazy-cut loop submits no job") {
     def build(eager: Boolean) = {
       var steps = 0
-      val (jobs, df) = countJobs {
+      val (df, c) = measure {
         Fixpoint.iterate("narrow", spark.range(10).toDF("id"), None, eager)(
             Fixpoint.Fixed(5)) { (df, _, cut) =>
           steps += 1
           cut(df.select((col("id") + 1).as("id")))
         }
       }
-      (steps, jobs, df.agg(sum("id")).as[Long].head)
+      (steps, c.jobs, df.agg(sum("id")).as[Long].head)
     }
     // ids 5..14 after five +1 rounds
-    assert(build(eager = false) === ((5, 0, 95L)))
+    assert(build(eager = false) === ((5, 0L, 95L)))
     // the eager cut pays one job per round while the loop is built
-    assert(build(eager = true) === ((5, 5, 95L)))
+    assert(build(eager = true) === ((5, 5L, 95L)))
   }
 
   test("Cap(n): bfsHops past maxHops returns exactly maxHops + 1 rings") {

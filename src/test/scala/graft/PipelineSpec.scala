@@ -4,13 +4,12 @@ import graft.operators.Cleanse
 import graft.pipelines._
 import graft.sources.{CsvSource, JsonSource, LakeWriter}
 import org.apache.spark.GraftListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{CacheManagerProbe, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline compositions (reference: the pipelines package). */
@@ -282,23 +281,8 @@ class PipelineSpec extends SparkSpecBase {
     (csv.getPath, json.getPath)
   }
 
-  /** Spark jobs submitted while `body` runs, and its result. */
-  private def countJobs[T](body: => T): (Int, T) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicLong()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    GraftListenerBridge.drainListenerBus(sc)
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      GraftListenerBridge.drainListenerBus(sc)
-      (jobs.get.toInt, out)
-    } finally sc.removeSparkListener(l)
-  }
-
-  /** Shuffle records written by each stage that ran inside `body`. */
+  /** Shuffle records written by each stage that ran inside `body`: a
+   * per-stage list, which [[Harness.Counters]]' totals do not keep. */
   private def stageShuffleRecords(body: => Unit): Seq[Long] = {
     val sc = spark.sparkContext
     val recs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -357,12 +341,12 @@ class PipelineSpec extends SparkSpecBase {
       csv -> (p => CsvSource.readWithQuarantine(spark, p, feedSchema)),
       json -> (p => JsonSource.readWithQuarantine(spark, p, feedSchema)))
     for ((path, read) <- sources) releasesEverything {
-      val (jobs, (clean, validityQ, dqQ, unparsed)) = countJobs {
+      val ((clean, validityQ, dqQ, unparsed), called) = measure {
         val (good, bad) = read(path)
         val (c, v, d, _) = RawToStaging.runWithDq(good, feedCfg, feedDq)
         (c, v, d, bad)
       }
-      assert(jobs === 0, s"$path: jobs at call time")
+      assert(called.jobs === 0, s"$path: jobs at call time")
       val out = s"${dir.getPath}/lake-${new java.io.File(path).getName}"
       val read0 = localBytesRead()
       LakeWriter.writePartitioned(clean, s"$out/staging", keyCol = Some("user_id"),
@@ -404,8 +388,8 @@ class PipelineSpec extends SparkSpecBase {
       fastSpeedThreshold = 10.0, fastIntervalSec = 300L, slowIntervalSec = 1800L,
       rowKeyCol = "row_key")
     releasesEverything {
-      val (jobs, cur) = countJobs(StagingToCurated.run(staged, cfg))
-      assert(jobs === 0, "jobs at call time")
+      val (cur, called) = measure(StagingToCurated.run(staged, cfg))
+      assert(called.jobs === 0, "jobs at call time")
       // the window exchange is the one shuffle that writes every staged
       // row; the rollups' exchanges carry partial aggregates
       val stages = stageShuffleRecords {

@@ -29,9 +29,9 @@ class PlanTextSpec extends SparkSpecBase {
     test(s"$name posts plan text within its bound at sf0.001") {
       // every query builds its own shared stages (the spanning forest)
       SharedStage.clear()
-      val (chars, _) = planChars {
+      val chars = measure {
         CacheScope.scoped { SparkEntry.queries(name)(spark, sfDir).count() }
-      }
+      }._2.planChars
       info(s"$name posted $chars plan characters")
       assert(chars <= bound,
         s"$name posted $chars plan characters at sf0.001, bound $bound — a " +

@@ -72,28 +72,14 @@ class Round11Spec extends SparkSpecBase {
     SharedStage.clear()
     CacheScope.scoped { SparkEntry.queries("q_bm25")(spark, sfDir).count() }
     val scored = SparkEntry.queries("q_bm25")(spark, sfDir)
-    val shuffleAcc = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) shuffleAcc.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-      val s0 = shuffleAcc.get
-      assert(scored.count() > 0)
-      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-      val bytes = shuffleAcc.get - s0
-      // budget: rank-pruned window rows only — far below the matched-
-      // postings volume (~100 KB at sf0.001) a token-partitioned view
-      // would re-shuffle per batch
-      assert(bytes < (48L << 10),
-        s"warm BM25 scoring shuffled $bytes bytes — the assembled view " +
-          "lost its doc partitioning and the per-batch aggregation is " +
-          "re-shuffling matched postings")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val bytes = measure(assert(scored.count() > 0))._2.shuffleWriteBytes
+    // budget: rank-pruned window rows only — far below the matched-
+    // postings volume (~100 KB at sf0.001) a token-partitioned view
+    // would re-shuffle per batch
+    assert(bytes < (48L << 10),
+      s"warm BM25 scoring shuffled $bytes bytes — the assembled view " +
+        "lost its doc partitioning and the per-batch aggregation is " +
+        "re-shuffling matched postings")
   }
 
   test("compact: staged-sibling swap, filter-scoped; untouched partitions keep files byte-for-byte") {

@@ -219,20 +219,11 @@ class Round8Spec extends SparkSpecBase {
     // The gate is deferred into the plan: CONSTRUCTION runs no job and
     // throws nothing; the refusal surfaces when the action runs.
     val flat = docs.withColumn("score", lit(0.5))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(l)
-    val frame = try {
-      val f = Sampling.budgetSelect(flat, "doc_id", "score", "toks",
+    val (frame, built) = measure {
+      Sampling.budgetSelect(flat, "doc_id", "score", "toks",
         budget = 100L, maxBoundaryRows = 100L)
-      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-      f
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get === 0, s"budgetSelect construction ran ${jobs.get} job(s)")
+    }
+    assert(built.jobs === 0, s"budgetSelect construction ran ${built.jobs} job(s)")
     val e = intercept[Exception] { frame.count() }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)

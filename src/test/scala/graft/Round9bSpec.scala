@@ -121,21 +121,7 @@ class Round9bSpec extends SparkSpecBase {
       .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
     f.delete(victim, false)
 
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          bytesRead.addAndGet(te.taskMetrics.inputMetrics.bytesRead): Unit
-    }
-    def readBytes(body: => Unit): Long = {
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-        val s0 = bytesRead.get; body
-        org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-        bytesRead.get - s0
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def readBytes(body: => Unit): Long = measure(body)._2.inputBytes
     def normalize(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.toSeq.updated(0,
         new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath)).toSet

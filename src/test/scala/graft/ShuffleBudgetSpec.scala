@@ -238,25 +238,6 @@ class ShuffleBudgetSpec extends SparkSpecBase {
     "q_dendrogram" -> (1L << 20),     // one forest + three node-sized cuts
   )
 
-  private val shuffleAcc = new java.util.concurrent.atomic.AtomicLong
-  private val listener = new org.apache.spark.scheduler.SparkListener {
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) shuffleAcc.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-    }
-  }
-
-  private def shuffleBytesOf(body: => Unit): Long = {
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-      val s0 = shuffleAcc.get
-      body
-      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
-      shuffleAcc.get - s0
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   budgets.foreach { case (name, budget) =>
     test(s"$name shuffles within its byte budget at sf0.001") {
       val fn = SparkEntry.queries(name)
@@ -269,9 +250,9 @@ class ShuffleBudgetSpec extends SparkSpecBase {
       // measured volume stops being this query's own plan)
       SharedStage.clear()
       spark.catalog.clearCache()
-      val got = shuffleBytesOf {
-        CacheScope.scoped { fn(spark, sfDir).count(): Unit }
-      }
+      val got = measure {
+        CacheScope.scoped { fn(spark, sfDir).count() }
+      }._2.shuffleWriteBytes
       info(s"$name measured $got shuffle bytes")
       assert(got <= budget,
         s"$name shuffled $got bytes at sf0.001, budget $budget — the plan " +

@@ -25,6 +25,11 @@ def main():
         elif os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    # a misspelt query argument would otherwise select nothing and pass
+    unknown = sorted(only - oracle.keys())
+    if unknown:
+        print(f"unknown queries (not in oracle_sql.json): {', '.join(unknown)}")
+        sys.exit(1)
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
