@@ -241,11 +241,12 @@ object Bench {
     // exactly the rounds where the signal matters most. Full list is in
     // the bench_out.json artifact.
     val failedCompact = failed.take(8).map(jstr).mkString("[", ",", "]")
+    val buildSecCompact = if (buildQs.nonEmpty) r3(buildEntry.sec) else "null"
     val compact =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
         s""""cpu_sec":${r3(totalCpuSec)},""" +
         s""""sf":${jstr(sfDir)},"n_queries":${queryResults.size},""" +
-        s""""n_entries":${results.size},"build_sec":${r3(buildEntry.sec)},""" +
+        s""""n_entries":${results.size},"build_sec":$buildSecCompact,""" +
         s""""total_with_build":${r3(totalWithBuild)},""" +
         s""""shuffle_mb":${r3(shuffleMb)},"spill_mb":${r3(spillMb)},""" +
         s""""failed_count":${failed.size},"failed":$failedCompact,""" +

@@ -15,9 +15,16 @@ object Cleanse {
    * ('yyyy-MM-dd HH:mm:ss', ISO with 'T', optional millis / trailing zone),
    * drop unparseable rows, derive year/month/day partition columns
    * (reference: utils/common_functions_raw.py:20 parse_base_datetime).
+   * [[parseTimestampColumn]] followed by [[dateParts]].
    */
   def parseTimestamps(df: DataFrame, inputCol: String = "ts",
-                      dominantFormat: String = "yyyy-MM-dd'T'HH:mm:ss"): DataFrame = {
+                      dominantFormat: String = "yyyy-MM-dd'T'HH:mm:ss"): DataFrame =
+    dateParts(parseTimestampColumn(df, inputCol, dominantFormat), inputCol)
+
+  /** The parse half of [[parseTimestamps]]: `inputCol` becomes a
+   * timestamp and rows it cannot parse are dropped; no partition columns. */
+  def parseTimestampColumn(df: DataFrame, inputCol: String,
+                           dominantFormat: String = "yyyy-MM-dd'T'HH:mm:ss"): DataFrame = {
     val stripped = regexp_extract(
       regexp_replace(col(inputCol), "Z$", ""),
       "^(.+?)([+-]\\d{2}:\\d{2})?$", 1)
@@ -32,12 +39,15 @@ object Cleanse {
       try_to_timestamp(stripped, lit("yyyy-MM-dd'T'HH:mm:ss.SSS")),
       try_to_timestamp(stripped, lit("yyyy-MM-dd'T'HH:mm:ss")),
       try_to_timestamp(col(inputCol), lit("yyyy-MM-dd HH:mm:ss")))
-    df.withColumn(inputCol, parsed)
-      .filter(col(inputCol).isNotNull)
-      .withColumn("year", date_format(col(inputCol), "yyyy"))
-      .withColumn("month", date_format(col(inputCol), "MM"))
-      .withColumn("day", date_format(col(inputCol), "dd"))
+    df.withColumn(inputCol, parsed).filter(col(inputCol).isNotNull)
   }
+
+  /** Append the year/month/day partition strings ("yyyy", "MM", "dd") of
+   * the timestamp column `tsCol`. */
+  def dateParts(df: DataFrame, tsCol: String): DataFrame =
+    df.withColumn("year", date_format(col(tsCol), "yyyy"))
+      .withColumn("month", date_format(col(tsCol), "MM"))
+      .withColumn("day", date_format(col(tsCol), "dd"))
 
   /**
    * Rename drifting source columns to canonical names; absent sources are

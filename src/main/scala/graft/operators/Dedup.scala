@@ -26,8 +26,17 @@ object Dedup {
 
   /**
    * Exact dedup on a content key: one row kept per distinct key.
-   * Equivalent to the reference's dropDuplicates-on-hash; a hash
-   * aggregation with map-side combine, no sort.
+   * Equivalent to the reference's dropDuplicates-on-hash; an aggregation
+   * with map-side combine that keeps the first value of every other
+   * column.
+   *
+   * It is a codegen HashAggregate only while every column outside
+   * `keyCols` is fixed-width (numbers, booleans, dates, timestamps). One
+   * string, binary or nested column in that payload makes Spark plan an
+   * interpreted SortAggregate instead: a sort plus a row-at-a-time loop
+   * outside whole-stage codegen, on both sides of the shuffle. Derive
+   * columns that are functions of the keys (e.g. `date_format` partition
+   * strings) after the dedup, as [[graft.pipelines.RawToStaging]] does.
    */
   def exact(df: DataFrame, keyCols: Seq[String]): DataFrame =
     df.dropDuplicates(keyCols)

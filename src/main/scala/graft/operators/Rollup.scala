@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
 object Rollup {
 
   /** Per (keys..., day): first/last timestamp of the day
-   * (reference: fact_voyage_daily.py:108 voyage_segments). */
+   * (reference: fact_voyage_daily.py:108 voyage_segments). A caller that
+   * also needs [[dailyMetrics]] wants [[dailyFact]]: both in one aggregate. */
   def dailySegments(df: DataFrame, keys: Seq[String], tsSecCol: String,
                     dayCol: String): DataFrame =
     df.groupBy((keys :+ dayCol).map(col): _*)
@@ -24,7 +25,8 @@ object Rollup {
 
   /** Per (keys..., day): additive metrics — point count plus sums of the
    * given value columns (reference: fact_voyage_daily.py:127
-   * voyage_summary_staging). */
+   * voyage_summary_staging). A caller that also needs [[dailySegments]]
+   * wants [[dailyFact]]: both in one aggregate. */
   def dailyMetrics(df: DataFrame, keys: Seq[String], dayCol: String,
                    valueCols: Seq[String]): DataFrame = {
     val aggs = count(lit(1)).as("day_pointcount") +:
@@ -78,6 +80,10 @@ object Rollup {
    * from ONE aggregation — [[dailySegments]] and [[dailyMetrics]] group
    * by the same keys, so computing them separately (as the reference's
    * two fact builders do) costs two shuffles plus a join for nothing.
+   * Columns: keys..., day, day_first_sec, day_last_sec, day_pointcount,
+   * day_sum_<v>... — the order of `dailySegments ⋈ dailyMetrics` on
+   * (keys..., day). Unlike that inner join, a group whose key is null is
+   * kept, so Σ day_pointcount is the input's row count.
    */
   def dailyFact(df: DataFrame, keys: Seq[String], tsSecCol: String,
                 dayCol: String, valueCols: Seq[String]): DataFrame = {

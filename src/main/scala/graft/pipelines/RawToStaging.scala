@@ -9,14 +9,25 @@ import org.apache.spark.sql.types.DataType
  * Raw → staging pipeline: the composed operator chain of the reference's
  * pipelines/raw_to_staging.py, re-expressed as lazy frames.
  *
- * Order mirrors the reference: column normalization → schema enforcement
- * → empty→null → timestamp parse + y/m/d derivation → coordinate
- * validity split (invalid rows quarantined, not dropped) → value clamps
- * → content-hash dedup → movement flag. Catalyst fuses the projections
- * and pushes the validity filter into the scan. [[run]] returns one plan
- * per output; [[runWithDq]] computes the staged frame once and splits
- * every output from it, as the reference writes staging and its
- * quarantine from one cleaned DataFrame.
+ * Steps: column normalization → schema enforcement → empty→null →
+ * coordinate validity split (invalid rows quarantined, not dropped) →
+ * timestamp parse on each side → value clamps → content-hash dedup →
+ * y/m/d derivation → movement flag. Catalyst fuses the projections and
+ * pushes the validity filter into the scan. [[run]] returns one plan per
+ * output; [[runWithDq]] computes the staged frame once and splits every
+ * output from it, as the reference writes staging and its quarantine
+ * from one cleaned DataFrame.
+ *
+ * The reference parses before the split and derives y/m/d right after
+ * the parse; here the staged side derives them after the dedup. They are
+ * `date_format` strings, and a string column in the dedup's payload gives
+ * its aggregation buffer a variable-width field, which makes Spark plan
+ * an interpreted SortAggregate (a sort and a row-at-a-time loop outside
+ * whole-stage codegen) on both sides of the shuffle. Since y/m/d are
+ * functions of the timestamp, deriving them from the kept row gives the
+ * same rows and leaves a fixed-width payload, which plans a codegen
+ * HashAggregate. The staged columns keep the reference's order: …, year,
+ * month, day, movement_flag.
  */
 object RawToStaging {
 
@@ -32,18 +43,26 @@ object RawToStaging {
       speedThreshold: Double)
 
   /** (staged, quarantine): quarantine carries rows failing the validity
-   * predicate; staged is deduped, clamped, flagged, y/m/d-partitionable. */
+   * predicate; staged is deduped, clamped, flagged, y/m/d-partitionable.
+   * Both carry year/month/day, and rows whose timestamp does not parse
+   * are in neither.
+   *
+   * The split comes before the timestamp parse, so each side parses only
+   * its own rows: the quarantine, a sliver of the feed, does not pay the
+   * parse for every line. `validCondition` therefore sees the normalized
+   * frame, where `tsCol` is still the source string and there is no
+   * y/m/d; a predicate over the parsed timestamp does not belong here. */
   def run(raw: DataFrame, cfg: Config): (DataFrame, DataFrame) = {
     val normalized = Cleanse.emptyToNull(
       Cleanse.enforceSchema(
         Cleanse.normalizeColumns(raw, cfg.columnMapping), cfg.schema))
-    val parsed = Cleanse.parseTimestamps(normalized, cfg.tsCol)
-    val (valid, quarantine) = Cleanse.validSplit(parsed, cfg.validCondition(parsed))
+    val (valid, invalid) = Cleanse.validSplit(normalized, cfg.validCondition(normalized))
+    val deduped = Dedup.exact(
+      Cleanse.clampUpper(Cleanse.parseTimestampColumn(valid, cfg.tsCol), cfg.clampCaps),
+      cfg.dedupCols)
     val staged = Movement.flag(
-      Dedup.exact(
-        Cleanse.clampUpper(valid, cfg.clampCaps), cfg.dedupCols),
-      cfg.speedCol, cfg.speedThreshold)
-    (staged, quarantine)
+      Cleanse.dateParts(deduped, cfg.tsCol), cfg.speedCol, cfg.speedThreshold)
+    (staged, Cleanse.parseTimestamps(invalid, cfg.tsCol))
   }
 
   /** Declarative data-quality screens appended to the staging pipeline:

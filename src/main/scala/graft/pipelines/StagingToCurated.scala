@@ -16,8 +16,10 @@ import org.apache.spark.sql.functions._
  * ONE shuffle, and the enriched frame is a [[graft.CacheScope.once]]
  * point: that shuffle runs once per call, not once per output, however
  * many of the three outputs are landed. The rollups then aggregate with
- * map-side combine. No job runs in [[run]]; the first output's action
- * computes the enrichment.
+ * map-side combine; the daily fact is one fused aggregate
+ * ([[Rollup.dailyFact]]), not the reference's segments ⋈ metrics pair,
+ * so it costs one shuffle and keeps groups with a null key. No job runs
+ * in [[run]]; the first output's action computes the enrichment.
  */
 object StagingToCurated {
 
@@ -45,9 +47,7 @@ object StagingToCurated {
       cfg.tsSecCol, cfg.speedCol, "movement_state", cfg.dayCol,
       cfg.fastSpeedThreshold, cfg.fastIntervalSec, cfg.slowIntervalSec,
       cfg.rowKeyCol)
-    val daily = Rollup.dailySegments(enriched, keys, cfg.tsSecCol, cfg.dayCol)
-      .join(Rollup.dailyMetrics(enriched, keys, cfg.dayCol, Seq(cfg.speedCol)),
-        keys :+ cfg.dayCol)
+    val daily = Rollup.dailyFact(enriched, keys, cfg.tsSecCol, cfg.dayCol, Seq(cfg.speedCol))
     val summary = Rollup.sessionSummary(enriched, keys, cfg.tsSecCol, cfg.speedCol)
     Curated(trajectory, daily, summary)
   }

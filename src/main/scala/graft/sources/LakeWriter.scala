@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -9,10 +9,34 @@ import org.apache.spark.sql.functions._
  * (reference: pipelines/raw_to_staging.py:124-133 — dynamic overwrite so
  * a daily rerun replaces ONLY the partitions it recomputed, never the
  * whole table).
+ *
+ * Every table the library lands — the writes here, [[StateStore]]'s
+ * versions and [[graft.streaming.LakeSink]]'s batches — goes through
+ * [[landing]], so the lake has one file format.
  */
 object LakeWriter {
 
   val DefaultPartitionCols: Seq[String] = Seq("year", "month", "day")
+
+  /**
+   * The lake's one file format: parquet whose column chunks are
+   * zstd-compressed. Lake files are written once and scanned by every
+   * query after, and the reference's query engine (Athena) bills by bytes
+   * scanned, so the codec is chosen for size. Spark's default, snappy, is
+   * byte-oriented LZ with no entropy stage: it finds few repeats in
+   * high-entropy strings, and the lake's widest columns are exactly
+   * those. Hex digests and geohashes use 16- and 32-symbol alphabets,
+   * which an entropy coder packs into 4 or 5 bits a character; snappy
+   * keeps 8. On the lakehouse benchmark's backfill, a 64-character
+   * `row_key` digest was 43% of the lake under snappy, which shrank it
+   * by 3%; zstd halves it, and lands a third fewer bytes per row over
+   * the whole lake, at a CPU cost inside the run-to-run spread.
+   *
+   * It is a per-write option: the library sets no session config, and a
+   * caller's own writes keep the session's codec.
+   */
+  private[graft] def landing(df: DataFrame): DataFrameWriter[Row] =
+    df.write.format("parquet").option("compression", "zstd")
 
   /**
    * Write `df` partitioned by `partitionCols`, overwriting only the
@@ -34,11 +58,11 @@ object LakeWriter {
           (pmod(xxhash64(col(k)), lit(filesPerPartition)))): _*)
       case None => df.repartition(partitionCols.map(col): _*)
     }
-    arranged.write
+    landing(arranged)
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .partitionBy(partitionCols: _*)
-      .parquet(path)
+      .save(path)
     // a long-lived session may hold SharedStage frames computed from this
     // path — drop them now so the next consumer recomputes from the new
     // snapshot instead of serving pre-overwrite rows
@@ -192,7 +216,7 @@ object LakeWriter {
     }
     // a fresh version dir needs no dynamic-overwrite mode: nothing
     // pre-existing can be clobbered, and visibility is the marker's job
-    arranged.write.partitionBy(partitionCols: _*).parquet(target.toString)
+    landing(arranged).partitionBy(partitionCols: _*).save(target.toString)
     f.create(marker).close() // marker LAST: the atomic visibility point
     graft.SharedStage.invalidate(path)
   }
@@ -221,7 +245,7 @@ object LakeWriter {
     if (f.exists(marker)) return // idempotent re-run
     if (f.exists(target)) f.delete(target, true) // crashed attempt
     tables.foreach { case (name, df) =>
-      df.write.parquet(new org.apache.hadoop.fs.Path(target, name).toString)
+      landing(df).save(new org.apache.hadoop.fs.Path(target, name).toString)
     }
     f.create(marker).close() // one marker commits the whole set
     graft.SharedStage.invalidate(root)
@@ -480,11 +504,9 @@ object LakeWriter {
     // so each task holds exactly one bucket's rows → ONE file per bucket.
     // That single-file property is what lets the scan expose the sortBy
     // order (multi-file buckets force the join to re-sort locally).
-    df.repartition(nBuckets, col(keyCol))
-      .write
+    landing(df.repartition(nBuckets, col(keyCol)))
       .bucketBy(nBuckets, keyCol)
       .sortBy(keyCol)
-      .format("parquet")
       .mode("overwrite")
       .saveAsTable(table)
 
@@ -501,14 +523,14 @@ object LakeWriter {
                      clusterCols: Seq[String],
                      partitionCols: Seq[String] = DefaultPartitionCols,
                      filesPerPartition: Int = 4): Unit = {
-    df.repartition((partitionCols.map(col) :+
+    landing(df.repartition((partitionCols.map(col) :+
         pmod(xxhash64(clusterCols.map(col): _*), lit(filesPerPartition))): _*)
-      .sortWithinPartitions((partitionCols ++ clusterCols).map(col): _*)
-      .write
+      .sortWithinPartitions((partitionCols ++ clusterCols).map(col): _*))
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .partitionBy(partitionCols: _*)
-      .parquet(path)
+      .save(path)
+    graft.SharedStage.invalidate(path)
   }
 
   /**
@@ -908,13 +930,13 @@ object LakeWriter {
       .sortWithinPartitions(rangeKeys: _*)
       .drop("_z")
     if (partitionCols.isEmpty)
-      arranged.write.mode("overwrite").parquet(path)
+      landing(arranged).mode("overwrite").save(path)
     else
-      arranged.write
+      landing(arranged)
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite")
         .partitionBy(partitionCols: _*)
-        .parquet(path)
+        .save(path)
     graft.SharedStage.invalidate(path)
   }
 }

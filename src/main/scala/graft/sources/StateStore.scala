@@ -170,6 +170,14 @@ object StateStore {
   private def bucketOf(keys: Seq[String], nBuckets: Int) =
     pmod(xxhash64(keys.map(col): _*), lit(nBuckets)).cast("int")
 
+  /** Land `state` as `target`'s `bucket=` dirs, one file per bucket, in
+   * the lake's file format ([[LakeWriter.landing]]). */
+  private def landBuckets(state: DataFrame, keys: Seq[String], nBuckets: Int,
+                          target: Path): Unit =
+    LakeWriter.landing(state.withColumn("bucket", bucketOf(keys, nBuckets))
+        .repartition(col("bucket")))
+      .partitionBy("bucket").mode("overwrite").save(target.toString)
+
   /**
    * MERGE `deltas` (one pre-aggregated row per key) into the store as
    * snapshot `version`: sums add, spans extend — [[StateOps.mergeDeltas]]
@@ -249,9 +257,7 @@ object StateStore {
           StateOps.mergeDeltas(pinnedDeltas.limit(0), pinnedDeltas,
             keys, sumCols, minCols, maxCols, replaceCols, unionCols)
       }
-      merged.withColumn("bucket", bucketOf(keys, buckets))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite").parquet(target.toString)
+      landBuckets(merged, keys, buckets, target)
       // marker LAST: commit is the atomic visibility point
       f.create(new Path(target, CommitMarker)).close()
       // drop any SharedStage frames computed from this store: the new
@@ -294,9 +300,7 @@ object StateStore {
           onlyBuckets = Some(touched)).foreach { prev =>
         val kept = prev.drop("bucket")
           .join(d.drop("bucket"), keyCols, "left_anti")
-        kept.withColumn("bucket", bucketOf(keyCols, buckets))
-          .repartition(col("bucket"))
-          .write.partitionBy("bucket").mode("overwrite").parquet(target.toString)
+        landBuckets(kept, keyCols, buckets, target)
         // an all-keys-deleted bucket writes no dir; land an empty marker
         // dir so the version still SHADOWS the old bucket on read
         touched.foreach { b =>
@@ -331,9 +335,7 @@ object StateStore {
       sys.error(s"compactSnapshot: empty store at $root"))
     // self-read-then-overwrite trap: the target is a NEW dir, so the
     // lazy plan never scans files it is replacing — no checkpoint needed
-    state.withColumn("bucket", bucketOf(keys, buckets))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(target.toString)
+    landBuckets(state, keys, buckets, target)
     f.create(new Path(target, CommitMarker)).close()
   }
 

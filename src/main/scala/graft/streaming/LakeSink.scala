@@ -50,9 +50,9 @@ object LakeSink {
     df.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append")
+        LakeWriter.landing(batch).mode("append")
           .partitionBy(partitionCols: _*)
-          .parquet(path)
+          .save(path)
         graft.SharedStage.invalidate(path)
       }
       .start()
@@ -81,11 +81,12 @@ object LakeSink {
   /** One idempotent-append micro-batch (factored for replay tests). */
   def appendBatch(batch: DataFrame, batchId: Long, path: String,
                   partitionCols: Seq[String]): Unit = {
-    batch.withColumn("_ingest_batch", org.apache.spark.sql.functions.lit(batchId))
-      .write.mode("overwrite")
+    LakeWriter.landing(
+        batch.withColumn("_ingest_batch", org.apache.spark.sql.functions.lit(batchId)))
+      .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy((partitionCols :+ "_ingest_batch"): _*)
-      .parquet(path)
+      .save(path)
     graft.SharedStage.invalidate(path)
   }
 

@@ -1,13 +1,17 @@
 package graft
 
-import graft.operators.Cleanse
+import graft.operators.{Cleanse, Dedup, Movement, Rollup, Sessionize}
 import graft.pipelines._
 import graft.sources.{CsvSource, JsonSource, LakeWriter}
 import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{CacheManagerProbe, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, ToTimestamp}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan}
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField,
+  StructType, TimestampType}
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
@@ -267,6 +271,25 @@ class PipelineSpec extends SparkSpecBase {
     dedupCols = Seq("user_id", "ts", "lat", "lon"),
     speedCol = "speed", speedThreshold = 0.5)
 
+  private val curCfg = StagingToCurated.Config(
+    idCol = "user_id", tsSecCol = "ts_sec", dayCol = "day",
+    latCol = "lat", lonCol = "lon", speedCol = "speed",
+    gapSeconds = 10800L, speedThreshold = 0.5,
+    fastSpeedThreshold = 10.0, fastIntervalSec = 300L, slowIntervalSec = 1800L,
+    rowKeyCol = "row_key")
+
+  /** A staged frame with the columns [[curCfg]] names. */
+  private def curatedInput(staged: DataFrame): DataFrame =
+    staged.withColumn("ts_sec", unix_timestamp(col("ts")))
+      .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+      .withColumn("row_key", sha2(concat_ws("|", col("user_id"), col("ts_sec"),
+        col("lat"), col("lon")), 256))
+
+  /** The feed as an all-string frame: the unparseable MMSIs become null
+   * user_ids under the schema's try_cast instead of CSV quarantine rows. */
+  private def feedFrame: DataFrame =
+    feed.map(f => (f.mmsi, f.ts, f.lat, f.lon, f.sog, f.cog)).toDF(feedSchema.fieldNames: _*)
+
   private val feedDq = RawToStaging.DqConfig(
     Seq("speed_non_negative" -> (col("speed") >= 0.0)))
 
@@ -375,20 +398,10 @@ class PipelineSpec extends SparkSpecBase {
       val (good, _) = CsvSource.readWithQuarantine(spark, csv, feedSchema)
       LakeWriter.writePartitioned(RawToStaging.run(good, feedCfg)._1, s"$dir/staging")
     }
-    val staged = LakeWriter.read(spark, s"$dir/staging")
-      .withColumn("ts_sec", unix_timestamp(col("ts")))
-      .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-      .withColumn("row_key", sha2(concat_ws("|", col("user_id"), col("ts_sec"),
-        col("lat"), col("lon")), 256))
+    val staged = curatedInput(LakeWriter.read(spark, s"$dir/staging"))
     val n = staged.count()
-    val cfg = StagingToCurated.Config(
-      idCol = "user_id", tsSecCol = "ts_sec", dayCol = "day",
-      latCol = "lat", lonCol = "lon", speedCol = "speed",
-      gapSeconds = 10800L, speedThreshold = 0.5,
-      fastSpeedThreshold = 10.0, fastIntervalSec = 300L, slowIntervalSec = 1800L,
-      rowKeyCol = "row_key")
     releasesEverything {
-      val (cur, called) = measure(StagingToCurated.run(staged, cfg))
+      val (cur, called) = measure(StagingToCurated.run(staged, curCfg))
       assert(called.jobs === 0, "jobs at call time")
       // the window exchange is the one shuffle that writes every staged
       // row; the rollups' exchanges carry partial aggregates
@@ -402,6 +415,123 @@ class PipelineSpec extends SparkSpecBase {
       assert(stages.count(_ == n) === 1, s"per-stage shuffle records $stages, $n staged rows")
       assert(spark.read.parquet(s"$dir/summary").agg(sum("n_points")).head().getLong(0) === n)
       assert(spark.read.parquet(s"$dir/trajectory").count() < n)
+    }
+  }
+
+  test("raw→staging dedup plans a HashAggregate on both sides, never a SortAggregate") {
+    val plan = RawToStaging.run(feedFrame, feedCfg)._1.queryExecution.sparkPlan
+    val sortAggs = plan.collect { case a: SortAggregateExec => a }
+    assert(sortAggs.isEmpty, plan.treeString)
+    assert(plan.collect { case a: HashAggregateExec => a }.size === 2, plan.treeString)
+  }
+
+  test("raw→staging keeps its columns, and year/month/day follow ts on every row") {
+    val (staged, quarantine) = RawToStaging.run(feedFrame, feedCfg)
+    val parsed = Seq("user_id" -> LongType, "ts" -> TimestampType, "lat" -> DoubleType,
+      "lon" -> DoubleType, "speed" -> DoubleType, "course" -> DoubleType,
+      "year" -> StringType, "month" -> StringType, "day" -> StringType)
+    def fields(df: DataFrame) = df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    assert(fields(staged) === parsed :+ ("movement_flag" -> IntegerType))
+    assert(fields(quarantine) === parsed)
+    for (df <- Seq(staged, quarantine)) {
+      val off = df.filter(not(
+        col("year") <=> date_format(col("ts"), "yyyy") &&
+        col("month") <=> date_format(col("ts"), "MM") &&
+        col("day") <=> date_format(col("ts"), "dd")))
+      assert(df.count() > 0 && off.count() === 0)
+    }
+  }
+
+  /** [[RawToStaging.run]] as it was composed before the validity split
+   * moved ahead of the timestamp parse: parse every row, then split. */
+  private def parseThenSplit(raw: DataFrame, cfg: RawToStaging.Config)
+      : (DataFrame, DataFrame) = {
+    val normalized = Cleanse.emptyToNull(
+      Cleanse.enforceSchema(Cleanse.normalizeColumns(raw, cfg.columnMapping), cfg.schema))
+    val parsed = Cleanse.parseTimestampColumn(normalized, cfg.tsCol)
+    val (valid, invalid) = Cleanse.validSplit(parsed, cfg.validCondition(parsed))
+    val deduped = Dedup.exact(Cleanse.clampUpper(valid, cfg.clampCaps), cfg.dedupCols)
+    (Movement.flag(Cleanse.dateParts(deduped, cfg.tsCol), cfg.speedCol, cfg.speedThreshold),
+      Cleanse.dateParts(invalid, cfg.tsCol))
+  }
+
+  /** True when every timestamp parse in `plan` is evaluated only for rows
+   * that already failed the coordinate test: the one Filter holding that
+   * test has no parse below it, and inside that Filter the test comes
+   * before every conjunct that parses (a Filter evaluates its conjuncts
+   * in order and stops at the first false one). */
+  private def parsesOnlyInvalidRows(plan: LogicalPlan): Boolean = {
+    def parses(e: Expression) = e.exists(_.isInstanceOf[ToTimestamp])
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(a, b) => conjuncts(a) ++ conjuncts(b)
+      case x => Seq(x)
+    }
+    def isValidity(e: Expression) =
+      !parses(e) && e.references.exists(_.name.equalsIgnoreCase("lat"))
+    val splits = plan.collect { case f: Filter if conjuncts(f.condition).exists(isValidity) => f }
+    splits match {
+      case Seq(f) =>
+        val cs = conjuncts(f.condition)
+        val firstParse = cs.indexWhere(parses)
+        !f.child.exists(_.expressions.exists(parses)) &&
+          (firstParse < 0 || cs.indexWhere(isValidity) < firstParse)
+      case _ => false
+    }
+  }
+
+  test("raw→staging splits on validity before the timestamp parse; the rows are unchanged") {
+    // the feed, plus lines whose timestamp does not parse on both sides
+    // of the coordinate test: each side drops them after its split
+    val badTs = Seq(("399999991", "not-a-time", "10.0", "-70.0", "1.0", "5.0"),
+      ("399999992", "2024-13-45 99:00:00", "95.0", "-70.0", "1.0", "5.0"))
+      .toDF(feedSchema.fieldNames: _*)
+    // landed and read back, so the optimizer cannot fold the plan into a
+    // local relation
+    val src = Files.createTempDirectory("graft-split").resolve("feed").toString
+    feedFrame.unionByName(badTs).write.parquet(src)
+    val raw = spark.read.parquet(src)
+    val (staged, quarantine) = RawToStaging.run(raw, feedCfg)
+    val (oldStaged, oldQuarantine) = parseThenSplit(raw, feedCfg)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(staged.columns.toSeq === oldStaged.columns.toSeq)
+    assert(quarantine.columns.toSeq === oldQuarantine.columns.toSeq)
+    assert(rows(staged) === rows(oldStaged))
+    val q = rows(quarantine)
+    assert(q.nonEmpty && q === rows(oldQuarantine))
+    assert(!q.exists(_.startsWith("399999992|")), "an unparseable quarantine line landed")
+    val plan = quarantine.queryExecution.optimizedPlan
+    assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ToTimestamp]))),
+      plan.treeString)
+    assert(parsesOnlyInvalidRows(plan), plan.treeString)
+    // the old composition parsed ahead of the test: the check tells them apart
+    assert(!parsesOnlyInvalidRows(oldQuarantine.queryExecution.optimizedPlan))
+  }
+
+  test("StagingToCurated daily: one aggregate, no join; equals segments ⋈ metrics") {
+    CacheScope.scoped {
+      val staged = CacheScope.persist(curatedInput(RawToStaging.run(feedFrame, feedCfg)._1))
+      val n = staged.count()
+      val nullIds = staged.filter(col("user_id").isNull).count()
+      assert(nullIds > 0, "the fixture must stage rows with a null user_id")
+      val daily = StagingToCurated.run(staged, curCfg).daily
+      val plan = daily.queryExecution.optimizedPlan
+      assert(plan.collect { case a: Aggregate => a }.size === 1, plan.treeString)
+      assert(plan.collect { case j: Join => j }.isEmpty, plan.treeString)
+      // every staged row is counted, the null-user_id ones too
+      assert(daily.agg(sum("day_pointcount")).head().getLong(0) === n)
+      assert(daily.filter(col("user_id").isNull).agg(sum("day_pointcount")).head().getLong(0)
+        === nullIds)
+      // the reference's two fact builders joined, over the same sessions
+      val keys = Seq("user_id", "session_id")
+      val sessioned = Sessionize(staged, "user_id", "ts_sec", curCfg.gapSeconds,
+        tieBreak = Seq("row_key"))
+      val joined = Rollup.dailySegments(sessioned, keys, "ts_sec", "day")
+        .join(Rollup.dailyMetrics(sessioned, keys, "day", Seq("speed")), keys :+ "day")
+      assert(daily.columns.toSeq === joined.columns.toSeq)
+      def rows(df: DataFrame) = df.filter(col("user_id").isNotNull)
+        .withColumn("day_sum_speed", round(col("day_sum_speed"), 6)).collect().toSet
+      val (got, want) = (rows(daily), rows(joined))
+      assert(want.nonEmpty && got === want)
     }
   }
 }
