@@ -28,8 +28,9 @@ import org.apache.spark.sql.{Column, DataFrame}
  *    new ring, and transitively the previous ring's blocks). It saves
  *    one eager job per round, the measured wall floor of the
  *    tiny-graph loops.
- *  - EAGER: the cut runs its own job per round. Only clusterPairs uses
- *    it; its call site records why.
+ *  - EAGER: the cut runs its own job per round. Only clusterPairs' loop
+ *    uses it; its call site records why. [[sizedInput]] cuts eagerly
+ *    too, because the size it reports exists only once the blocks do.
  *
  * With `checkpointDir` set the cut is a RELIABLE checkpoint into that
  * directory (blocks survive executor loss — what keeps a lost executor
@@ -86,6 +87,11 @@ object Fixpoint {
    * converged) to stderr. */
   private val debug: Boolean = sys.env.contains("GRAFT_LOOP_DEBUG")
 
+  /** The `GRAFT_LOOP_DEBUG` line of loop `name`: `[loop] name: how`. An
+   * operator that finishes without running its loop says so here too. */
+  private[graft] def note(name: String, how: => String): Unit =
+    if (debug) System.err.println(s"[loop] $name: $how")
+
   /**
    * Run `step` from `init` under `policy`. A step gets the state, the
    * 1-based round number and the loop's cut, and returns the next
@@ -99,8 +105,7 @@ object Fixpoint {
     val cut: Cut = lineageCut(_, checkpointDir, eager)
     var state = init
     var rounds = 0
-    def log(how: String): Unit =
-      if (debug) System.err.println(s"[loop] $name: $rounds rounds, $how")
+    def log(how: String): Unit = note(name, s"$rounds rounds, $how")
     // Cap checks the bound before probing (no probe job at the cap);
     // Converge probes first, so a state done exactly at the bound passes
     def finished(): Boolean = policy match {
@@ -136,6 +141,29 @@ object Fixpoint {
     val leaf = lineageCut(df, checkpointDir, eager = false)
     if (partitionBy.isEmpty) leaf
     else CacheScope.persist(leaf.repartition(partitionBy: _*))
+  }
+
+  /** [[input]]'s cut of `df`, materialised now, with the bytes it
+   * stores: a local cut's blocks as the block manager master records
+   * them, a reliable cut's checkpoint files under `checkpointDir`.
+   * Materialising is the cut's one job (after the stage jobs of `df`'s
+   * own plan); reading the size submits none. What an operator decides
+   * from the size (one task or a loop) is decided on bytes that exist,
+   * not on the planner's estimate. */
+  private[graft] def sizedInput(df: DataFrame,
+                                checkpointDir: Option[String]): (DataFrame, Long) = {
+    val leaf = lineageCut(df, checkpointDir, eager = true)
+    val rdd = leaf.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.get
+    val bytes = rdd.getCheckpointFile match {
+      case Some(f) =>
+        val path = new org.apache.hadoop.fs.Path(f)
+        path.getFileSystem(rdd.sparkContext.hadoopConfiguration)
+          .getContentSummary(path).getLength
+      case None => org.apache.spark.GraftListenerBridge.storedBytes(rdd)
+    }
+    (leaf, bytes)
   }
 
   private def lineageCut(df: DataFrame, dir: Option[String],

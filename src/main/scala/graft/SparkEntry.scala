@@ -114,7 +114,10 @@ object SparkEntry {
       Text.trigramIndex(Tables.documents(s, dir), "doc_id", "text"))
 
   /** Connected-component cluster labels over [[jaccardPairs]], shared the
-   * same way (three consumers: cluster / canonical / split). */
+   * same way (three consumers: cluster / canonical / split). While the
+   * pairs fit under the broadcast threshold, [[Dedup.clusterPairs]]
+   * answers in one union-find task over their cut and the shared stage
+   * caches that task's rows; no label round runs. */
   private def dupClusters(s: SparkSession, dir: String): DataFrame =
     SharedStage.get(dir, "dup_clusters:documents:n=3:t=0.7")(
       Dedup.clusterPairs(jaccardPairs(s, dir), "id_a", "id_b"))

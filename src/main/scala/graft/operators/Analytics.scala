@@ -373,8 +373,9 @@ object Analytics {
    * One composition, no new machinery: the intra-community edge set
    * (two membership joins + an equality filter — components cannot
    * cross communities because only same-community edges survive) feeds
-   * [[graft.operators.Dedup.clusterPairs]]' log-round
-   * pointer-shortcutting CC; nodes with no intra edge become
+   * [[graft.operators.Dedup.clusterPairs]]' CC (one union-find task on a
+   * small edge set, the log-round pointer-shortcutting loop above the
+   * broadcast threshold); nodes with no intra edge become
    * singletons. Labels are component-min node ids — distinct across
    * communities by construction. Compose after [[louvainCommunities]]
    * or [[lpaCommunities]] for the Leiden well-connectedness guarantee.
@@ -459,7 +460,7 @@ object Analytics {
     // NESTED composition (moves inside aggregation inside moves)
     // otherwise multiplies the logical tree past what plan
     // stringification can hold. The six per-level frames materialize
-    // with the next action (clusterPairs' sum test or the caller's).
+    // with the next action (clusterPairs' pair cut or the caller's).
     val (part, _, _, _, mapping) = graft.Fixpoint.iterate("leidenCommunities",
         (null: DataFrame, sym0, Option.empty[DataFrame], Option.empty[DataFrame],
           mapping0), checkpointDir)(graft.Fixpoint.Fixed(maxLevels)) {

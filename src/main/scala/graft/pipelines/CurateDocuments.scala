@@ -13,8 +13,10 @@ import org.apache.spark.sql.functions._
  * near-dup cluster.
  *
  * Stage order is cost order: the map-only scrubs and annotations run
- * before anything that shuffles; the one genuinely iterative step
- * (connected components) runs on the already-shrunk corpus. The split
+ * before anything that shuffles; connected components runs on the
+ * already-shrunk corpus's near-dup pairs, in one union-find task while
+ * they fit under the broadcast threshold (the min-label loop only above
+ * it, see [[Dedup.clusterPairs]]). The split
  * keys on the CLUSTER id, which both prevents near-copy train/eval
  * leakage and makes the assignment invariant to WHICH cluster member
  * survived (retuning the keep-score never reshuffles the split).
@@ -61,7 +63,10 @@ object CurateDocuments {
       .join(entropy, Seq(cfg.idCol), "left")
       .withColumn("entropy", coalesce(col("entropy"), lit(0.0)))
     // 3. near-dup clusters → keep the highest-quality member (ties to
-    //    the smallest id), carrying cluster_id + n_members through
+    //    the smallest id), carrying cluster_id + n_members through.
+    //    clusterPairs materialises the pairs' cut now; on the one-task
+    //    path each of the two readers below runs the union-find as one
+    //    task over that cut's blocks, inside the caller's action
     val pairs = Dedup.minhashLsh(annotated, cfg.idCol, cfg.textCol,
       n = cfg.shingleSize, threshold = cfg.jaccardThreshold)
     val clusters = Dedup.clusterPairs(pairs, "id_a", "id_b")

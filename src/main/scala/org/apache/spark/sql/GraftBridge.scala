@@ -43,4 +43,10 @@ object GraftBridge {
     (classic.Dataset.ofRows(session, relation),
       () => relation.cacheBuilder.clearCache(blocking = false))
   }
+
+  /** `spark.sql.autoBroadcastJoinThreshold` of `df`'s session in bytes;
+   * -1 turns broadcasting off. */
+  def broadcastThreshold(df: DataFrame): Long =
+    df.sparkSession.asInstanceOf[classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
 }

@@ -100,13 +100,15 @@ class FixpointSpec extends SparkSpecBase {
 
   test("clusterPairs with a checkpointDir cuts into it and keeps the labels") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cp-pairs")
-    CacheScope.scoped {
+    // on the loop: 60 pairs are far under the broadcast threshold, where
+    // the one-task path runs no round to cut
+    onTheLoop(CacheScope.scoped {
       val local = labelsOf(Dedup.clusterPairs(triangles, "id_a", "id_b"))
       val reliable = labelsOf(Dedup.clusterPairs(triangles, "id_a", "id_b",
         checkpointDir = Some(dir.toString)))
       assert(local === triangleLabels)
       assert(reliable === local)
-    }
+    })
     // labels0 is already the answer on triangles, so the loop runs one
     // round: one checkpointed RDD for it, one for the pair source
     val rdds = java.nio.file.Files.walk(dir).toArray.map(_.toString)
@@ -167,10 +169,12 @@ class FixpointSpec extends SparkSpecBase {
 
   test("clusterPairs fails loudly when maxIter rounds leave labels unconverged") {
     // a 500-long chain needs ~9 shortcut rounds; 2 cannot converge it,
-    // and partial labels must never come back as an answer
+    // and partial labels must never come back as an answer. On the loop:
+    // `maxIter` bounds the loop only, and the chain is under the
+    // broadcast threshold, where one task answers without rounds
     val chain = (1L until 500L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val err = intercept[IllegalStateException] {
-      Dedup.clusterPairs(chain, "id_a", "id_b", maxIter = 2).collect()
+      onTheLoop(Dedup.clusterPairs(chain, "id_a", "id_b", maxIter = 2).collect())
     }
     assert(err.getMessage.contains("clusterPairs") &&
       err.getMessage.contains("2 rounds"), err.getMessage)

@@ -372,11 +372,12 @@ class Round11bSpec extends SparkSpecBase {
     // wrong); the label-of-label shortcut halves chains every round, so
     // the default iteration budget is ample. ER match graphs really look
     // like this (consecutive near-identical records each matching the
-    // next), which is how the sf1 tier exposed it.
+    // next), which is how the sf1 tier exposed it. On the loop: the chain
+    // is under the broadcast threshold, where one task answers it.
     import graft.operators.Dedup
     val chain = (1L until 500L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val labels = Dedup.clusterPairs(chain, "id_a", "id_b", maxIter = 20)
-      .select("cluster_id").distinct().as[Long].collect()
+    val labels = onTheLoop(Dedup.clusterPairs(chain, "id_a", "id_b", maxIter = 20)
+      .select("cluster_id").distinct().as[Long].collect())
     assert(labels.toSeq === Seq(1L),
       "the whole chain must collapse to the min label within the budget")
   }

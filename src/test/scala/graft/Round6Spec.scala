@@ -187,9 +187,11 @@ class Round6Spec extends SparkSpecBase {
     assert(ranks(Some(dir)) === ranks(None))
 
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (12L, 11L)).toDF("a", "b")
-    def clusters(ck: Option[String]) =
+    // on the loop, whose rounds are what a reliable cut protects: four
+    // pairs are under the broadcast threshold, where one task answers
+    def clusters(ck: Option[String]) = onTheLoop(
       Dedup.clusterPairs(pairs, "a", "b", checkpointDir = ck)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(clusters(Some(dir)) === clusters(None))
     assert(clusters(None) === Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L))

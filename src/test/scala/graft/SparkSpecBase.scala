@@ -16,4 +16,18 @@ abstract class SparkSpecBase extends AnyFunSuite {
   /** What ran while `body` ran ([[Harness.measure]] on the test session). */
   protected def measure[T](body: => T): (T, Harness.Counters) =
     Harness.measure(spark)(body)
+
+  /** `body` with `spark.sql.autoBroadcastJoinThreshold` at `bytes`; the
+   * session's setting is restored after. */
+  protected def withBroadcastThreshold[T](bytes: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** `body` with the broadcast threshold at -1, so
+   * [[operators.Dedup.clusterPairs]] runs its min-label loop whatever
+   * the size of its input. */
+  protected def onTheLoop[T](body: => T): T = withBroadcastThreshold("-1")(body)
 }
